@@ -235,11 +235,12 @@ object Bench {
       // a different core count used to overwrite the binding run's full
       // artifact — destroying exactly the retry/cleared evidence a
       // suspect adjudication needs. The copy is keyed by the core count
-      // the run bound, so multiple same-round runs each leave their own
-      // forensics. Additions-only: the canonical artifact and the stdout
-      // line are unchanged.
+      // the run's session actually bound (its live default parallelism),
+      // so multiple same-round runs each leave their own forensics.
+      // Additions-only: the canonical artifact and the stdout line are
+      // unchanged.
       java.nio.file.Files.copy(new java.io.File("BENCH_FULL.json").toPath,
-        new java.io.File(s"BENCH_FULL_${Sessions.cpus}c.json").toPath,
+        new java.io.File(s"BENCH_FULL_${spark.sparkContext.defaultParallelism}c.json").toPath,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       ()
     }

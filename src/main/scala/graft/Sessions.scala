@@ -14,8 +14,9 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
 
-  /** Default parallelism: env override, else 32 (the driver's local[32]). */
-  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** Default parallelism: env override, else the live machine's cores. */
+  def cpus: String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
 
   def local(threads: String = cpus, appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()

@@ -241,6 +241,24 @@ object DedupQueries {
     s"""WITH $PairsCteSql
        |SELECT doc_a, doc_b, jaccard FROM verified""".stripMargin)(nearDupPairs)
 
+  /** Exact Σcomponent of a label table, the convergence signal of the
+    * components loops. DECIMAL(38,0) accumulation keeps the sum exact at
+    * any id scale (a double sum could alias two different label states; a
+    * long sum could overflow at 10¹²⁺ ids). The sum is NULL for an empty
+    * table, which sums to 0 — but also for a non-empty one whose labels
+    * are all NULL or whose sum overflowed (non-ANSI), and treating those
+    * as 0 could report a false convergence, so they fail. The emptiness
+    * check runs only on the NULL branch: a non-NULL sum costs one job.
+    */
+  private[analytics] def labelSum(df: DataFrame): java.math.BigDecimal =
+    Option(df.agg(sum(col("component").cast(DecimalType(38, 0))))
+      .collect()(0).getDecimal(0))
+      .getOrElse {
+        if (!df.isEmpty) throw new IllegalStateException(
+          "label sum is NULL over a non-empty label table (NULL labels or DECIMAL overflow)")
+        java.math.BigDecimal.ZERO
+      }
+
   /** Connected components over the near-dup pair graph — the dedup
     * end-game: each group of mutually-similar documents collapses to one
     * component whose id (= min doc_id in the component) is the keeper.
@@ -276,14 +294,7 @@ object DedupQueries {
     // non-increasing per key (min-propagation over a fixed key set), so
     // `next == labels` iff Σcomponent is unchanged — one partial-aggregated
     // scan of the just-checkpointed frame instead of the historical
-    // join-and-count of two full label tables per round. DECIMAL(38,0)
-    // accumulation keeps the sum exact at any id scale (a double sum
-    // could alias two different label states; a long sum could overflow
-    // at 10¹²⁺ ids).
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      Option(df.agg(sum(col("component").cast(DecimalType(38, 0))))
-        .collect()(0).getDecimal(0))
-        .getOrElse(java.math.BigDecimal.ZERO) // empty graph: sum is NULL
+    // join-and-count of two full label tables per round.
     var prevSum = labelSum(labels)
     var converged = false
     var rounds = 0

@@ -1,6 +1,7 @@
 package graft.ingest
 
 import java.sql.Timestamp
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.schema.Schemas
@@ -105,7 +106,7 @@ object IngestJob {
     val advancedIds = rows.collect {
       case r if res.perGroup.getOrElse(r.getString(1), 0L) > 0L => r.getInt(0)
     }.toSet
-    Watermarks.advance(spark, usersPath, spec.platform, advancedIds, now) // K9
+    Watermarks.advanceFrom(spark, usersPath, users, spec.platform, advancedIds, now) // K9
     IngestResult(spec.platform, res.perGroup, res.inserted)
   }
 
@@ -127,6 +128,9 @@ object IngestJob {
     * fails is isolated as a Left — other platforms proceed, and because
     * the sink is idempotent and the watermark only advances on success,
     * the failed platform's next run retries the same window safely.
+    * Only non-fatal failures are retried: a VirtualMachineError,
+    * InterruptedException or LinkageError propagates from the first
+    * attempt, since retrying cannot cure it.
     */
   def runWithRetry(
       spark: SparkSession,
@@ -140,7 +144,7 @@ object IngestJob {
     var attempt = 0
     while (attempt <= maxRetries) {
       try return Right(run(spark, usersPath, warehouse, spec, mode, now))
-      catch { case e: Throwable => last = e; attempt += 1 }
+      catch { case NonFatal(e) => last = e; attempt += 1 }
     }
     Left(s"${spec.platform}: failed after ${maxRetries + 1} attempts: ${last.getMessage}")
   }

@@ -66,10 +66,23 @@ object Watermarks {
       usersPath: String,
       platform: String,
       advanced: Set[Int],
+      to: Timestamp): Unit =
+    if (advanced.nonEmpty) advanceFrom(spark, usersPath, read(spark, usersPath), platform, advanced, to)
+
+  /** `advance` over `users`, a frame of the control table the caller has
+    * already resolved (an ingest op's own control scan), so the advance
+    * does not read and infer the table a second time. `users` must be a
+    * read of `usersPath` taken after its last rewrite.
+    */
+  private[ingest] def advanceFrom(
+      spark: SparkSession,
+      usersPath: String,
+      users: DataFrame,
+      platform: String,
+      advanced: Set[Int],
       to: Timestamp): Unit = {
     if (advanced.isEmpty) return
     val c = s"last_fetched_$platform"
-    val users = read(spark, usersPath)
     val updated = users.withColumn(c,
       when(col("id").isin(advanced.toSeq: _*) && (col(c).isNull || col(c) < lit(to)), lit(to))
         .otherwise(col(c)))

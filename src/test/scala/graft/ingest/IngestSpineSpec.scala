@@ -2,7 +2,11 @@ package graft.ingest
 
 import java.nio.file.Files
 import java.sql.Timestamp
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.schema.Schemas
@@ -178,5 +182,51 @@ class IngestSpineSpec extends AnyFunSuite {
     val authors = spark.read.parquet(s"$wh/trustpilot_reviews")
       .select("author_name").collect().map(_.getString(0)).toSet
     assert(authors == Set("Ann", "Bob"))
+  }
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    ListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      ListenerBus.drain(sc)
+      (out, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  // Job budgets for one general-tick micro-batch that inserts a row and
+  // advances a watermark: 2 control-table jobs (the scan, the rewrite), the
+  // source plan once, and the sink's anti-join, count and write; a
+  // prunable sink adds the touched-partition lookup.
+  test("job budget: general tick on a prunable sink") {
+    val (wh, users) = fresh()
+    Watermarks.advance(spark, users, "trustpilot", Set(1), wm2020)
+    val spec = Pipelines.specs(fixturesDir).find(_.platform == "trustpilot").get
+    // seed the sink with one of the two rows the tick will re-deliver
+    val c = Company(1, "Acme", Some("acme.com"))
+    val raw = spec.connector.fetch(spark, c,
+      FetchParams(Some(wm2020), Some(now), Some(spec.generalLimit)))
+    val seed = spec.normalize(raw, lit(c.name), lit(c.handle.orNull), lit(now))
+      .filter(col("author_name") === "Ann")
+    DedupSink.append(spark, s"$wh/trustpilot_reviews", seed,
+      Schemas.sinks("trustpilot_reviews")._2, spec.tiebreak.map(col),
+      partitionBy = Seq("company_name"))
+    val (res, jobs) = jobsDuring(IngestJob.run(spark, users, wh, spec, General(40), now))
+    assert(res.perCompany == Map("Acme" -> 1L)) // Bob; Ann is a duplicate
+    assert(jobs <= 11, s"$jobs jobs for one prunable general-tick op")
+  }
+
+  test("job budget: general tick on a global-key sink") {
+    val (wh, users) = fresh()
+    IngestJob.run(spark, users, wh, twitterSpec, Catchup(), now)
+    val (res, jobs) = jobsDuring(IngestJob.run(spark, users, wh, twitterSpec, General(40), now))
+    assert(res.perCompany == Map("Beta" -> 1L))
+    assert(jobs <= 10, s"$jobs jobs for one global-key general-tick op")
   }
 }

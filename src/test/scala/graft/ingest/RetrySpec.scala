@@ -16,13 +16,15 @@ class RetrySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val now = Timestamp.valueOf("2025-06-01 00:00:00")
 
-  /** A connector that throws on the first `failures` fetches. */
-  private class Flaky(inner: SourceConnector, failures: Int) extends SourceConnector {
+  /** A connector that throws `error` on the first `failures` fetches. */
+  private class Flaky(inner: SourceConnector, failures: Int,
+      error: Int => Throwable = n => new RuntimeException(s"transient source failure #$n"))
+    extends SourceConnector {
     val calls = new AtomicInteger(0)
     def platform: String = inner.platform
     def fetch(spark: SparkSession, c: Company, p: FetchParams): DataFrame = {
-      if (calls.incrementAndGet() <= failures)
-        throw new RuntimeException(s"transient source failure #${calls.get()}")
+      val n = calls.incrementAndGet()
+      if (n <= failures) throw error(n)
       inner.fetch(spark, c, p)
     }
   }
@@ -61,5 +63,35 @@ class RetrySpec extends AnyFunSuite {
     assert(!new java.io.File(s"$wh/twitter_mentions").exists())
     val wm = Watermarks.read(spark, users).collect().head.getAs[Timestamp]("last_fetched_twitter")
     assert(wm == null) // same window retried next run
+  }
+
+  test("a non-fatal failure gets maxRetries + 1 attempts") {
+    val (wh, users) = setup()
+    val base = Pipelines.specs(fixturesDir).find(_.platform == "twitter").get
+    val flaky = new Flaky(base.connector, failures = 99,
+      error = n => new IllegalStateException(s"source rejected request #$n"))
+    val res = IngestJob.runWithRetry(spark, users, wh, base.copy(connector = flaky),
+      Catchup(), now, maxRetries = 2)
+    assert(res.isLeft && res.left.exists(_.contains("3 attempts")))
+    assert(flaky.calls.get() == 3)
+  }
+
+  test("fatal errors propagate from the first attempt, unretried") {
+    val (wh, users) = setup()
+    val base = Pipelines.specs(fixturesDir).find(_.platform == "twitter").get
+    val fatal: Seq[() => Throwable] = Seq(
+      () => new StackOverflowError("simulated"),   // VirtualMachineError
+      () => new InterruptedException("simulated"),
+      () => new NoClassDefFoundError("simulated")) // LinkageError
+    fatal.foreach { make =>
+      val expected = make().getClass
+      val flaky = new Flaky(base.connector, failures = 99, error = _ => make())
+      val thrown = intercept[Throwable] {
+        IngestJob.runWithRetry(spark, users, wh, base.copy(connector = flaky), Catchup(), now)
+      }
+      assert(thrown.getClass == expected)
+      assert(flaky.calls.get() == 1, s"${expected.getSimpleName} was retried")
+    }
+    assert(!new java.io.File(s"$wh/twitter_mentions").exists())
   }
 }
