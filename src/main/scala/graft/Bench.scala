@@ -110,11 +110,11 @@ object Bench {
     val hfHead = BenchEnvelopes.hostFactor(ok, BenchEnvelopes.headlineCanaries,
       BenchEnvelopes.envelopeSec)
     // the STREAMING host factor (r16, the r15 verdict's missing #1):
-    // StreamDoctor proved the micro-batch floor swings ~3× between JVM
-    // windows while batch work swings ~1.4×, so the all-batch canary
-    // median structurally under-corrects the ev_stream family's bars —
-    // those scale by this factor instead (floored at hfHead, never below
-    // today's behavior)
+    // the r15 noop-sink drain matrix measured the micro-batch floor
+    // swinging ~3× between JVM windows while batch work swings ~1.4×, so
+    // the all-batch canary median structurally under-corrects the
+    // ev_stream family's bars — those scale by this factor instead
+    // (floored at hfHead, never below today's behavior)
     val hfStrHead = BenchEnvelopes.hostFactorStream(ok,
       BenchEnvelopes.headlineStreamCanaries, BenchEnvelopes.envelopeSec, hfHead)
     val rawSus = BenchEnvelopes.suspects(ok, hfHead, hfStrHead)

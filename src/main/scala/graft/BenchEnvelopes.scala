@@ -88,7 +88,7 @@ object BenchEnvelopes {
     // r15 re-pin of the streaming-machinery family (the r14 verdict's
     // weak x4): the judge's fresh-JVM runs reproduced 3-4.6x the r13-era
     // pins on untouched code — the micro-batch floor moved with the host,
-    // not a plan defect (StreamDoctor r15: the identical noop-sink drain
+    // not a plan defect (r15 measurement: the identical noop-sink drain
     // measures 2.8 s in one JVM window and 7.8 s in the next; batch agg
     // 0.8-1.2 s both). Two REAL levers shipped first — the sink upsert
     // clusters on the bucket column (one file per touched bucket instead
@@ -186,8 +186,8 @@ object BenchEnvelopes {
     * explicit, not name-prefix: the `ev_` family also contains pure batch
     * queries over the events table (ev_sessionize, ev_funnel, …), which
     * swing with the ordinary batch window. The distinction earns its own
-    * host factor because StreamDoctor's r15 matrix proved the micro-batch
-    * floor swings ~3× between JVM windows on this host while batch work
+    * host factor because the r15 noop-sink drain matrix showed the
+    * micro-batch floor swings ~3× between JVM windows on this host while batch work
     * swings ~1.4× — an all-batch canary set structurally under-corrects
     * exactly this family (the r15 verdict's missing #1, and the shape of
     * its one confirmed streaming suspect).

@@ -55,7 +55,10 @@ object AnnGraphLake {
                          edges: String, redges: String,
                          members: String, vectors: String)
 
-  final case class Handle(sinks: Sinks, cells: Long)
+  /** `seen`: the tables' commit versions pinned before `cells` was
+    * derived (see [[deriveHandle]]).
+    */
+  final case class Handle(sinks: Sinks, cells: Long, seen: Map[String, Long])
 
   private def sinksUnder(base: String) = Sinks(
     s"$base/centroids", s"$base/medoids", s"$base/edges",
@@ -66,10 +69,9 @@ object AnnGraphLake {
   // the six index tables alone would serve the cached handle without ever
   // running completeIntents in this session — the intent commit must
   // invalidate the memo so deriveHandle's completion hook actually fires
-  private def tablesOf(h: Handle): Seq[String] =
-    Seq(h.sinks.centroids, h.sinks.medoids, h.sinks.edges,
-      h.sinks.redges, h.sinks.members, h.sinks.vectors,
-      intentSink(h.sinks))
+  private def tablesOf(sk: Sinks): Seq[String] =
+    Seq(sk.centroids, sk.medoids, sk.edges, sk.redges, sk.members, sk.vectors,
+      intentSink(sk))
 
   /** The delete protocol's intent table — a sibling of the index tables
     * (the AnnLake convention): six tables, so no commit ordering fails
@@ -100,20 +102,26 @@ object AnnGraphLake {
     * pointer read when none).
     */
   private def deriveHandle(s: SparkSession, sk: Sinks): Handle = {
+    // pinned BEFORE the derive (AnnLake.deriveHandle's discipline)
+    val seen = MergeSink.currentVersions(tablesOf(sk))
     completeIntents(s, sk)
-    Handle(sk, ivfCellsFor(MergeSink.read(s, sk.vectors).count()))
+    Handle(sk, ivfCellsFor(MergeSink.read(s, sk.vectors).count()), seen)
   }
 
-  private val memo = new VersionedMemo[Handle](
-    tablesOf, (s, h) => deriveHandle(s, h.sinks))
+  /** The memo's revalidation step: `h` while none of its tables has a
+    * newer commit than it pinned, else a handle re-derived from the lake.
+    */
+  private def revalidated(s: SparkSession)(h: Handle): Handle =
+    if (MergeSink.currentVersions(tablesOf(h.sinks)) == h.seen) h
+    else deriveHandle(s, h.sinks)
 
-  /** Build (once per (session, dir), version-revalidated): persists the
+  /** Build (once per dir, version-revalidated): persists the
     * same in-plan artifacts the `ann_graph_beam` caches train — ONE
     * training/build pass feeds both tiers, the lake write is persistence,
     * not a second recipe.
     */
   private[graft] def ensureGraphLake(s: SparkSession, dir: String): Handle =
-    memo.get(s, dir) {
+    PlanCache.memo(dir, "ann_graph_lake", revalidated(s)) {
       val sk = sinksUnder(Staging.freshBase("graft_ann_graph", dir).getPath)
       val k = ivfCellsFor(Tables.embeddings(s, dir).count())
       MergeSink.merge(s, sk.centroids, ivfCarr(s, dir, k),
@@ -556,16 +564,13 @@ object AnnGraphLake {
     ()
   }
 
-  private val incrMemo = new VersionedMemo[Handle](
-    tablesOf, (s, h) => deriveHandle(s, h.sinks))
-
   /** Slice-built graph + the daily batch inserted — the incremental
     * lifecycle end-to-end, probed by `ann_graph_incr` whose oracle walks
     * the SAME slice-trained cells (AnnLake.SliceCellsCte) over the final
     * membership: exactness of the insert makes the persistence invisible.
     */
   private[graft] def ensureGraphIncrLake(s: SparkSession, dir: String): Handle =
-    incrMemo.get(s, dir) {
+    PlanCache.memo(dir, "ann_graph_lake_incr", revalidated(s)) {
       val sk = buildSliceGraph(s, dir, "graft_ann_graph_incr")
       addVectors(s, sk,
         Tables.embeddings(s, dir).filter(col("vec_id") % 5 === 0))

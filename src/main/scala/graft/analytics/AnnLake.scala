@@ -36,10 +36,10 @@ import graft.ingest.MergeSink
   *    pattern). `ann_ivfpq_incr` probes the merged index end-to-end with a
   *    full DuckDB oracle mirroring the slice-trained dataflow.
   *
-  * Freshness (r12 — wired, no longer prose): the ensure-memos are
-  * VERSION-KEYED (`VersionedMemo`): every access revalidates the four sink
-  * tables' last commit versions, and a maintenance commit landing after
-  * the memo warmed (a streaming drain, another session's daily batch) is
+  * Freshness (r12 — wired, no longer prose): each index handle pins its
+  * sink tables' last commit versions, and the ensure-memos (PlanCache)
+  * REVALIDATE it on every access: a maintenance commit landing after the
+  * memo warmed (a streaming drain, another session's daily batch) is
   * DETECTED — the version-derived state (the trained cell count probes
   * size nprobe from) re-derives against the live tables, no process
   * restart. Spec-pinned in AnnLakeSpec (stale memo detected + refreshed;
@@ -142,9 +142,10 @@ object AnnLake {
     * a property of the trained index, not of the live corpus count: a
     * corpus that doubled since training must not silently widen nprobe
     * without a retrain, and a maintenance commit must re-derive the count
-    * from the lake rather than serve the build-time snapshot.
+    * from the lake rather than serve the build-time snapshot. `seen` holds
+    * the tables' commit versions pinned BEFORE that derive.
     */
-  final case class IndexHandle(sinks: Sinks, cells: Long)
+  final case class IndexHandle(sinks: Sinks, cells: Long, seen: Map[String, Long])
 
   // the intent table is INCLUDED (the r13 AnnGraphLake advice, same hole
   // here): a crashed delete that committed only its intent advances no
@@ -161,21 +162,26 @@ object AnnLake {
     * (one O(1) pointer read when there are none).
     */
   private def deriveHandle(s: SparkSession, sk: Sinks): IndexHandle = {
+    // PIN-BEFORE-DERIVE (r12 advice): a commit landing DURING the derive
+    // is detected, and re-derived, at the next revalidation: one
+    // conservative extra derive, never a missed one
+    val seen = MergeSink.currentVersions(sinkTables(sk))
     completeIntents(s, sk)
-    IndexHandle(sk, MergeSink.read(s, sk.centroids).count())
+    IndexHandle(sk, MergeSink.read(s, sk.centroids).count(), seen)
   }
 
-  private val fullIdx = new VersionedMemo[IndexHandle](
-    h => sinkTables(h.sinks), (s, h) => deriveHandle(s, h.sinks))
+  /** The memo's revalidation step: `h` while none of its tables has a
+    * newer commit than it pinned, else a handle re-derived from the lake.
+    * O(tables) pointer reads, no Spark job unless a table advanced.
+    */
+  private def revalidated(s: SparkSession)(h: IndexHandle): IndexHandle =
+    if (MergeSink.currentVersions(sinkTables(h.sinks)) == h.seen) h
+    else deriveHandle(s, h.sinks)
 
   private[graft] def ensureAnnLake(s: SparkSession, dir: String): IndexHandle =
-    fullIdx.get(s, dir) {
+    PlanCache.memo(dir, "ann_lake_full", revalidated(s)) {
       deriveHandle(s, buildFullIndex(s, dir, "graft_ann", DefaultSaltTarget))
     }
-
-  /** Spec observability: the commit versions the full-tier memo believes. */
-  private[analytics] def fullSeen(dir: String): Option[Map[String, Long]] =
-    fullIdx.seen(dir)
 
   /** Persist the FULL-corpus index (the same cached training passes the
     * in-plan queries run — the lake write is a persistence step, not a
@@ -208,12 +214,9 @@ object AnnLake {
 
   // ---- INCREMENTAL slice-trained index + daily-batch merge ----------------
 
-  private val incrIdx = new VersionedMemo[IndexHandle](
-    h => sinkTables(h.sinks), (s, h) => deriveHandle(s, h.sinks))
-
   /** Spec observability: the commit versions the incr-tier memo believes. */
   private[analytics] def incrSeen(dir: String): Option[Map[String, Long]] =
-    incrIdx.seen(dir)
+    PlanCache.peek[IndexHandle](dir, "ann_lake_incr").map(_.seen)
 
   /** Union fresh postings into the touched cells: read ONLY the
     * manifest-pruned old rows, set-union the posting arrays, and MERGE
@@ -263,7 +266,7 @@ object AnnLake {
     * lake when a later maintenance commit is detected).
     */
   private[graft] def ensureAnnIncrLake(s: SparkSession, dir: String): IndexHandle =
-    incrIdx.get(s, dir) {
+    PlanCache.memo(dir, "ann_lake_incr", revalidated(s)) {
       val (sk, _) = buildSliceIndex(s, dir, "graft_ann_incr")
       // the DAILY BATCH path: assign to EXISTING cells, encode with
       // EXISTING codebooks (both read back from the LAKE — the round trip
@@ -725,11 +728,8 @@ object AnnLake {
     */
   private[analytics] val DelMod = 11
 
-  private val delIdx = new VersionedMemo[IndexHandle](
-    h => sinkTables(h.sinks), (s, h) => deriveHandle(s, h.sinks))
-
   private[graft] def ensureAnnDeleteLake(s: SparkSession, dir: String): IndexHandle =
-    delIdx.get(s, dir) {
+    PlanCache.memo(dir, "ann_lake_delete", revalidated(s)) {
       val (sk, _) = buildSliceIndex(s, dir, "graft_ann_delq")
       appendBatch(s, sk, normalized(s, dir).filter(col("vec_id") % 5 === 0))
       deleteVectors(s, sk,

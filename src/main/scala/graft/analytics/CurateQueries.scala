@@ -929,10 +929,9 @@ object CurateQueries {
     * (ensureBandSink's contract): DISTINCT md5(text) of the corpus docs,
     * keyed by the fingerprint — the dedup index a daily ingest probes.
     */
-  private val fpSinks = VersionedMemo.paths[String](Seq(_))
   private[graft] def ensureFpSink(s: org.apache.spark.sql.SparkSession,
                                   dir: String): String =
-    fpSinks.get(s, dir) {
+    PlanCache.memo(dir, "fp_sink") {
       val sink = s"${Staging.freshBase("graft_fps", dir).getPath}/sink"
       // fp plus the per-fingerprint REFCOUNT (r13, the window-set pattern):
       // cnt = distinct corpus docs with this content hash, so document

@@ -557,18 +557,16 @@ object DedupQueries {
     batchOut.unionByName(corpusOut)
   }
 
-  /** Process-local memo of the corpus cluster lake tables (k13Sinks'
+  /** Process-local memo of the corpus cluster lake tables (the k13 sink's
     * contract): the star-contracted corpus labels persisted TWICE — keyed
     * by doc_id (the contraction lookup) and as component → sorted member
     * postings (the changed-label fan-out) — because the two access paths
     * prune on different keys and MergeSink files cluster on their merge
     * key's digest. Construction, prestaged out of the measured probe.
     */
-  private val labelSinks =
-    VersionedMemo.paths[(String, String)](v => Seq(v._1, v._2))
   private[graft] def ensureLabelSinks(s: org.apache.spark.sql.SparkSession,
                                       dir: String): (String, String) =
-    labelSinks.get(s, dir) {
+    PlanCache.memo(dir, "label_sinks") {
       val base = Staging.freshBase("graft_labels", dir).getPath
       val byDoc = s"$base/by_doc"
       val byComp = s"$base/by_component"
@@ -605,10 +603,9 @@ object DedupQueries {
     * corpus-wide shingle cache — the last in-plan corpus artifact of the
     * incremental tier (r10).
     */
-  private val shingleSinks = VersionedMemo.paths[String](Seq(_))
   private[graft] def ensureShingleSink(s: org.apache.spark.sql.SparkSession,
                                        dir: String): String =
-    shingleSinks.get(s, dir) {
+    PlanCache.memo(dir, "shingle_sink") {
       val sink = s"${Staging.freshBase("graft_shingles", dir).getPath}/sink"
       val corpus = shingleBase(s, dir).filter(col("doc_id") % 5 =!= 0)
         .filter(size(col("shingles")) > 0) // verifyJaccard's base contract
@@ -951,14 +948,13 @@ object DedupQueries {
   }
 
   /** Process-local memo of the corpus band-postings lake table (same
-    * contract as k13Sinks): building the PRECOMPUTED corpus index is
+    * contract as the k13 sink): building the PRECOMPUTED corpus index is
     * construction work, prestaged by Bench/TimeQuery so the measured query
     * is the batch probe, exactly as a daily job probes yesterday's index.
     */
-  private val bandSinks = VersionedMemo.paths[String](Seq(_))
   private[graft] def ensureBandSink(s: org.apache.spark.sql.SparkSession,
                                     dir: String): String =
-    bandSinks.get(s, dir) {
+    PlanCache.memo(dir, "band_sink") {
       val sink = s"${Staging.freshBase("graft_bands", dir).getPath}/sink"
       val corpus = bandTable(s, dir).filter(col("doc_id") % 5 =!= 0)
         .groupBy("band_key")
@@ -980,10 +976,9 @@ object DedupQueries {
     * re-processes on retry (the per-sink [[DelBatchProp]] markers keep the
     * re-process from double-decrementing — see decrementWindows).
     */
-  private val tombSinks = VersionedMemo.paths[String](Seq(_))
   private[graft] def ensureTombSink(s: org.apache.spark.sql.SparkSession,
                                     dir: String): String =
-    tombSinks.get(s, dir) {
+    PlanCache.memo(dir, "tomb_sink") {
       val sink = s"${Staging.freshBase("graft_dd_tomb", dir).getPath}/sink"
       MergeSink.merge(s, sink,
         s.range(0).select(col("id").as("doc_id")),
@@ -1148,7 +1143,6 @@ object DedupQueries {
       // survivors' shingles come from the doc-keyed LAKE table (manifest-
       // pruned to the touched docs), NOT the corpus-wide shingle base —
       // bands + the exact-Jaccard verify both run over O(touched) rows
-      // (PurgeProfile is the receipt)
       val survSh = MergeSink.readOverlapping(s, shingleSink, survivors,
           Seq("doc_id"))
         .join(survivors, Seq("doc_id"))
@@ -1331,11 +1325,9 @@ object DedupQueries {
     * are content-idempotent, so the oracle-checked read-back is
     * identical either way.
     */
-  private val k10Sinks = VersionedMemo.paths[String](Seq(_))
-
   private[graft] def ensureMergeUpsertBase(s: org.apache.spark.sql.SparkSession,
                                            dir: String): String =
-    k10Sinks.get(s, dir) {
+    PlanCache.memo(dir, "k10_sink") {
       val sink = s"${Staging.freshBase("graft_k10", dir).getPath}/sink"
       val base = Tables.orders(s, dir)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -1378,17 +1370,14 @@ object DedupQueries {
     * aggregate over the final state, proving the incremental path exact.
     */
   /** Process-local memo of the k12 versioned sink (same contract as
-    * k13Sinks): the two merges CONSTRUCT the changing table; the operator
-    * under measurement is the incremental MV refresh (v1 read + changes
-    * combine). The sink is immutable after v2, so the memo is trivially
+    * the k13 sink): the two merges CONSTRUCT the changing table; the
+    * operator under measurement is the incremental MV refresh (v1 read +
+    * changes combine). The sink is immutable after v2, so the memo is trivially
     * safe across same-JVM invocations.
     */
-  private val k12Sinks =
-    VersionedMemo.paths[(String, Long, Long)](v => Seq(v._1))
-
   private[graft] def ensureIncrementalAggSink(
       s: org.apache.spark.sql.SparkSession, dir: String): (String, Long, Long) =
-    k12Sinks.get(s, dir) {
+    PlanCache.memo(dir, "k12_sink") {
       val sink = s"${Staging.freshBase("graft_k12", dir).getPath}/sink"
       val key = Seq("o_orderkey")
       val tb = Seq(col("o_orderkey"))
@@ -1452,11 +1441,9 @@ object DedupQueries {
     * immutable for a JVM's lifetime, and nothing is reused across JVMs —
     * a stale on-disk sink can never leak into the correctness gate.
     */
-  private val k13Sinks = VersionedMemo.paths[String](Seq(_))
-
   private[graft] def ensurePointLookupSink(s: org.apache.spark.sql.SparkSession,
                                            dir: String): String =
-    k13Sinks.get(s, dir) {
+    PlanCache.memo(dir, "k13_sink") {
       val sink = s"${Staging.freshBase("graft_k13", dir).getPath}/sink"
       val base = Tables.orders(s, dir)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -1496,16 +1483,6 @@ object DedupQueries {
     * old versions retain the rows (time travel). The oracle states the
     * end state declaratively: base rows minus the deleted keys.
     */
-  /** Process-local memo of the k14 base sink (same contract as k13Sinks):
-    * building the table being deleted FROM is construction, not the DML
-    * under measurement — Bench/TimeQuery prestage it so the timed region
-    * is delete + idempotent re-delete + read. The memo returning an
-    * already-deleted sink to a later same-JVM invocation is sound: the
-    * deletes are content-idempotent (a no-op on already-absent keys), so
-    * the read-back — the oracle-checked output — is identical either way.
-    */
-  private val k14Sinks = VersionedMemo.paths[String](Seq(_))
-
   /** k14's file sizing, derived from the table's row count so the sink
     * holds ~8 range-clustered files at EVERY scale factor (r17, guide
     * §6): the historical constant 2048 was sized for sf0.01 — at sf0.1
@@ -1520,9 +1497,17 @@ object DedupQueries {
                             dir: String): Long =
     math.max(2048L, Tables.orders(s, dir).count() / 8)
 
+  /** Process-local memo of the k14 base sink (same contract as the k13
+    * sink): building the table being deleted FROM is construction, not the
+    * DML under measurement — Bench/TimeQuery prestage it so the timed
+    * region is delete + idempotent re-delete + read. The memo returning an
+    * already-deleted sink to a later same-JVM invocation is sound: the
+    * deletes are content-idempotent (a no-op on already-absent keys), so
+    * the read-back — the oracle-checked output — is identical either way.
+    */
   private[graft] def ensureDeleteBase(s: org.apache.spark.sql.SparkSession,
                                       dir: String): String =
-    k14Sinks.get(s, dir) {
+    PlanCache.memo(dir, "k14_sink") {
       val sink = s"${Staging.freshBase("graft_k14", dir).getPath}/sink"
       val base = Tables.orders(s, dir)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -1644,10 +1629,8 @@ object DedupQueries {
 
   // --- span-level exact dedup (C4 / RefinedWeb line dedup) ----------------
 
-  // words per span — private[graft] so measurement tooling (ShuffleBytes'
-  // string-form baseline) references THE width instead of duplicating the
-  // literal and silently measuring a different workload (r11 advice)
-  private[graft] val SpanW = 10
+  // words per span
+  private val SpanW = 10
   // first-occurrence key = doc_id·shift + pos: requires pos < shift, i.e.
   // docs under 10M words (1e6 spans × 10). Long overflow needs
   // doc_id < ~9.2e12 on top — both far beyond this corpus generation; a
@@ -1825,10 +1808,9 @@ object DedupQueries {
     * (dd_exact_substr) stays string-exact — there the strings are in hand,
     * so its verify stage compares them directly.
     */
-  private val substrSinks = VersionedMemo.paths[String](Seq(_))
   private[graft] def ensureSubstrSink(s: org.apache.spark.sql.SparkSession,
                                       dir: String): String =
-    substrSinks.get(s, dir) {
+    PlanCache.memo(dir, "substr_sink") {
       val sink = s"${Staging.freshBase("graft_substr", dir).getPath}/sink"
       // (h, fp) plus the per-window REFCOUNT (r12 verdict ask #1): cnt =
       // how many distinct corpus docs contain the window. The probe's
@@ -2022,10 +2004,9 @@ object DedupQueries {
     * writes, prestaged by Bench/TimeQuery so the measured query is the
     * batch probe.
     */
-  private val spanSinks = VersionedMemo.paths[String](Seq(_))
   private[graft] def ensureSpanSink(s: org.apache.spark.sql.SparkSession,
                                     dir: String): String =
-    spanSinks.get(s, dir) {
+    PlanCache.memo(dir, "span_sink") {
       val sink = s"${Staging.freshBase("graft_spans", dir).getPath}/sink"
       // span text plus the per-window REFCOUNT (see ensureSubstrSink): the
       // DISTINCT window-set semantics stand (one row per span, cnt ≥ 1);

@@ -41,11 +41,14 @@ object GraphQueries {
     * persist was degraded to UnknownPartitioning by
     * `canChangeCachedPlanOutputPartitioning` and every iteration paid a
     * full re-exchange + re-sort of the edge table). N tracks
-    * defaultParallelism, not a constant.
+    * defaultParallelism, not a constant. The checkpoint is EAGER, so the
+    * build runs exactly once: a lazy persist raced concurrent AQE stage
+    * futures, which each recomputed the same cache partitions
+    * (gr_pagerank, r17: 113 s of duplicated task time on the build run).
     */
   private[analytics] def symTable(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
-    PlanCache.checkpointed(s, dir, "graph_sym") {
+    PlanCache.frame(s, dir, "graph_sym") {
       val edges = Tables.lineitem(s, dir)
         .select((col("l_orderkey") * 2).as("src"), (col("l_partkey") * 2 + 1).as("dst"))
         .distinct()
@@ -53,6 +56,7 @@ object GraphQueries {
         edges.select(col("dst").as("src"), col("src").as("dst")))
         .repartition(s.sparkContext.defaultParallelism, col("src"))
         .sortWithinPartitions("src")
+        .localCheckpoint(true)
     }
 
   val pagerank: QueryDef = QueryDef(

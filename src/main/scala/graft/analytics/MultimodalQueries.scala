@@ -882,8 +882,6 @@ object MultimodalQueries {
     Multimodal.image422Stats(media).toDF()
   }
 
-  private val mediaFpSinks = VersionedMemo.paths[String](Seq(_))
-
   /** The maintained MEDIA FINGERPRINT table (r16, E159 — the r15
     * verdict's missing-tier #5): image aHash codes ∪ audio delta-sign
     * codes persisted as a MergeSink keyed (and digest-clustered) on
@@ -898,7 +896,7 @@ object MultimodalQueries {
     */
   private[graft] def ensureMediaFpSink(s: org.apache.spark.sql.SparkSession,
                                        dir: String): String =
-    mediaFpSinks.get(s, dir) {
+    PlanCache.memo(dir, "media_fp_sink") {
       val sink = s"${Staging.freshBase("graft_mfp", dir).getPath}/sink"
       val img = Multimodal.imageHash(Multimodal.bmpMedia(s, Tables.documents(s, dir)))
         .toDF().select(col("media_id"), lit("image").as("kind"), col("code"))

@@ -1,36 +1,59 @@
 package graft.analytics
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
-/** The ONE memo-and-persist implementation behind every shared cached
-  * subplan (shingle tables, semdedup assignments, deviation tables, PQ
-  * subvectors, BFS edge tables, …).
+/** The ONE process-local memo behind every shared intermediate: cached
+  * subplans (shingle tables, semdedup assignments, deviation tables, PQ
+  * subvectors, BFS edge tables, …), the lake sinks and staged deliveries
+  * the `ensure*` builders construct, and the ANN index handles.
   *
-  * Why centralized: the per-file TrieMap copies this replaced had two
-  * latent faults (r8 advice): (1) an entry keyed only by (session, dir)
-  * kept serving a STALE table after the data under `dir` was rewritten
-  * within one session — the planted-corpus test pattern; (2) evicted or
-  * replaced entries were never `unpersist()`ed, leaking executor cache.
-  * This cache keys each entry by a CONTENT FINGERPRINT of the directory
-  * (every file's path, length and mtime — the same freshness signal
-  * Spark's own FileIndex uses) and unpersists whatever it drops.
+  * Key: (dir, tag). `dir` is the corpus directory the value is derived
+  * from; `tag` names the value. A FRAME entry is additionally bound to the
+  * live session that built it (a DataFrame belongs to its session): a
+  * request from another session rebuilds it, and entries of a stopped
+  * session are dropped (their blocks died with its executors). Path and
+  * handle entries are plain values, served to any session.
   *
-  * Scale note: the fingerprint walk is control-plane driver work, O(files)
-  * per cache lookup, no data scan. At lake scale the equivalent signal is
-  * the table's commit version (MergeSink.versions) — cheaper still.
+  * Freshness: one rule for every entry — the CONTENT FINGERPRINT of `dir`
+  * (every file's path, length and mtime, the freshness signal Spark's own
+  * FileIndex uses). A rewrite of the corpus in place rebuilds every entry
+  * derived from it; an unchanged corpus serves the memo. The walk is
+  * control-plane driver work, O(files) per lookup, no data scan and no
+  * Spark job. The faults this rule closes (r8 advice): an entry keyed only
+  * by (session, dir) served a STALE table after the planted-corpus test
+  * pattern rewrote `dir`, and a sink path built from it kept pointing at
+  * a table of the old corpus.
   *
-  * Since r11 this cache is a PROCESS-LOCAL ACCELERATOR, not the system of
-  * record: the ANN tier's trained cells, PQ codebooks and code tables are
-  * persisted as MergeSink tables (AnnLake) with an incremental
-  * assign-and-append path, so a new session probes the lake instead of
-  * retraining — the same story as every other corpus-scale artifact.
+  * Revalidation: a value that can go stale WITHOUT its corpus changing —
+  * an ANN index handle, whose trained cell count derives from sink tables
+  * that maintenance commits advance — passes `revalidate`, which runs on
+  * every hit and returns the value to serve (the same one when nothing
+  * moved). The handle owns that test: it pins its tables' commit versions
+  * before deriving and re-derives when any of them advanced.
+  *
+  * Release: a value superseded by a fingerprint change, or dropped by
+  * [[invalidate]], frees its blocks through [[release]], whether the build
+  * persisted it lazily or checkpointed it eagerly. Path and handle values
+  * hold no blocks.
+  *
+  * Nesting: builds nest (`ensureBandSink` → `bandTable`,
+  * `ensureGraphLake` → `graphEdges`), so every lookup and build runs under
+  * this object's monitor, which is reentrant. A build must never run inside
+  * `ConcurrentHashMap.computeIfAbsent`, which throws "Recursive update" on
+  * a nested build.
+  *
+  * Since r11 this memo is a PROCESS-LOCAL ACCELERATOR, not the system of
+  * record: trained ANN cells, PQ codebooks and code tables are persisted
+  * as MergeSink tables (AnnLake), so a new session probes the lake instead
+  * of retraining.
   */
 object PlanCache {
 
-  private final case class Entry(fingerprint: Long, df: DataFrame)
+  private final case class Entry(fingerprint: Long, owner: Option[SparkSession], value: Any)
 
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), Entry]
+  private val entries = scala.collection.mutable.HashMap.empty[(String, String), Entry]
 
   /** FNV-style fold of (path, length, mtime) over the directory tree. */
   private def fingerprint(dir: String): Long = {
@@ -43,63 +66,79 @@ object PlanCache {
     walk(new java.io.File(dir), -3750763034362895579L) // FNV-1a 64-bit offset basis
   }
 
-  /** Memoized persisted DataFrame for (session, dir, tag): rebuilt (and the
-    * stale copy unpersisted) whenever the files under `dir` change.
+  private def lookup[V](dir: String, tag: String, owner: Option[SparkSession],
+      revalidate: V => V)(build: => V): V = synchronized {
+    entries.filterInPlace { case (_, e) => !e.owner.exists(_.sparkContext.isStopped) }
+    val key = (dir, tag)
+    val fp = fingerprint(dir)
+    entries.get(key) match {
+      case Some(e) if e.fingerprint == fp && e.owner == owner =>
+        val v = revalidate(e.value.asInstanceOf[V])
+        if (v != e.value) entries.put(key, e.copy(value = v))
+        v
+      case stale =>
+        stale.foreach { e => entries.remove(key); releaseValue(e.value) }
+        val v = build
+        entries.put(key, Entry(fp, owner, v))
+        v
+    }
+  }
+
+  /** Memoized value for (dir, tag), e.g. a sink path: built on a miss,
+    * rebuilt when the files under `dir` change.
     */
+  def memo[V](dir: String, tag: String)(build: => V): V =
+    lookup[V](dir, tag, None, identity)(build)
+
+  /** [[memo]] whose hits pass through `revalidate`, which returns the value
+    * to serve.
+    */
+  def memo[V](dir: String, tag: String, revalidate: V => V)(build: => V): V =
+    lookup(dir, tag, None, revalidate)(build)
+
+  /** Memoized frame for (dir, tag), bound to `s`. The build owns its
+    * materialization (an eager `localCheckpoint` pins a physical layout
+    * for every consumer); use [[cached]] for the lazy persist.
+    */
+  def frame(s: SparkSession, dir: String, tag: String)(build: => DataFrame): DataFrame =
+    lookup[DataFrame](dir, tag, Some(s), identity)(build)
+
+  /** [[frame]] persisted lazily at MEMORY_AND_DISK. */
   def cached(s: SparkSession, dir: String, tag: String)(build: => DataFrame): DataFrame =
-    synchronized {
-      // drop entries of stopped sessions (their blocks died with the executor)
-      cache.filterInPlace { case ((sess, _, _), _) => !sess.sparkContext.isStopped }
-      val key = (s, dir, tag)
-      val fp = fingerprint(dir)
-      cache.get(key) match {
-        case Some(e) if e.fingerprint == fp => e.df
-        case stale =>
-          stale.foreach(_.df.unpersist())
-          val df = build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          cache.put(key, Entry(fp, df))
-          df
-      }
-    }
+    frame(s, dir, tag)(build.persist(StorageLevel.MEMORY_AND_DISK))
 
-  private val ckpt =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), Entry]
-
-  /** Memoized EAGERLY-CHECKPOINTED DataFrame for (session, dir, tag) —
-    * the [[cached]] contract for shared subplans whose consumers need a
-    * PINNED physical layout: a localCheckpoint's LogicalRDD carries the
-    * build's partitioning and sort order to every consumer (an
-    * InMemoryRelation's can be degraded by AQE re-planning), and the
-    * eager materialization runs exactly once — the lazy persist raced
-    * concurrent AQE stage futures, which each recomputed the same cache
-    * partitions (gr_pagerank, r17: 113 s of duplicated task time on the
-    * build run). Same content-fingerprint invalidation as [[cached]];
-    * dropped entries free their blocks when the RDD reference is GC'd
-    * (ContextCleaner), so no explicit unpersist exists or is needed.
-    */
-  def checkpointed(s: SparkSession, dir: String, tag: String)(build: => DataFrame): DataFrame =
-    synchronized {
-      ckpt.filterInPlace { case ((sess, _, _), _) => !sess.sparkContext.isStopped }
-      val key = (s, dir, tag)
-      val fp = fingerprint(dir)
-      ckpt.get(key) match {
-        case Some(e) if e.fingerprint == fp => e.df
-        case _ =>
-          val df = build.localCheckpoint(true)
-          ckpt.put(key, Entry(fp, df))
-          df
-      }
-    }
-
-  /** Drop (and unpersist) every entry under `dir` — the test-visible
+  /** Drop (and release) every entry under `dir` — the test-visible
     * invalidation hook for suites that rewrite a corpus in place.
     */
   def invalidate(dir: String): Unit = synchronized {
-    cache.filterInPlace {
-      case ((_, d, _), e) if d == dir => e.df.unpersist(); false
+    entries.filterInPlace {
+      case ((d, _), e) if d == dir => releaseValue(e.value); false
       case _ => true
     }
-    ckpt.filterInPlace { case ((_, d, _), _) => d != dir }
     ()
+  }
+
+  /** The current value for (dir, tag), without freshness checks or
+    * revalidation (spec observability).
+    */
+  private[analytics] def peek[V](dir: String, tag: String): Option[V] = synchronized {
+    entries.get((dir, tag)).map(_.value.asInstanceOf[V])
+  }
+
+  /** Free a frame's blocks: its persisted cache and, when it is an eager
+    * `localCheckpoint`, the checkpoint's underlying RDD.
+    */
+  private[graft] def release(df: Dataset[_]): Unit = {
+    df.unpersist()
+    df.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
+    ()
+  }
+
+  private def releaseValue(v: Any): Unit = v match {
+    case df: Dataset[_] => release(df)
+    case _ =>
   }
 }

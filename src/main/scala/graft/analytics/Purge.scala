@@ -50,8 +50,7 @@ import graft.ingest.MergeSink
   *
   * Cost: each tier is O(dropped docs' artifacts) manifest-pruned files —
   * the per-tier contracts, unchanged; the orchestrator adds one pruned
-  * tombstone probe. `tools/PurgeProfile` commits the measured per-sink
-  * copy-on-write footprint.
+  * tombstone probe.
   */
 object Purge {
 

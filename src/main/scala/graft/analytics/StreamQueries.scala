@@ -747,11 +747,9 @@ object StreamQueries {
     * the JVM's lifetime, so serving the memoized src to a later
     * invocation replays the identical delivery.
     */
-  private val stoStaging = VersionedMemo.paths[String](Seq(_))
-
   private[graft] def ensureSessionTimeoutDelivery(
       s: org.apache.spark.sql.SparkSession, dir: String): String =
-    stoStaging.get(s, dir) {
+    PlanCache.memo(dir, "sto_delivery") {
       import s.implicits._
       // explicit single-file staging (the delivery contract below): one
       // coalesced corpus file → the first micro-batch is exactly the corpus

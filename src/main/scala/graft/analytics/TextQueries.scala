@@ -666,8 +666,7 @@ object TextQueries {
   private[analytics] val trainRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 
   private[graft] def bpeTrain(s: org.apache.spark.sql.SparkSession,
-      dir: String,
-      onRound: (Int, Double) => Unit = (_, _) => ()): (DataFrame, DataFrame) = {
+      dir: String): (DataFrame, DataFrame) = {
     trainRuns.incrementAndGet()
     val vocab = vocabBase(s, dir)
     var v = vocab.withColumn("rep",
@@ -677,17 +676,12 @@ object TextQueries {
     var r = 1
     var exhausted = false
     while (r <= BpeRounds && !exhausted) {
-      val t0 = System.nanoTime()
       val w = bpeWinner(v).localCheckpoint(true)
       if (w.isEmpty) exhausted = true
       else {
         val wr = w.select(lit(r).as("merge_rank"), col("pair"), col("cnt"))
         winners = Some(winners.fold(wr)(_.unionAll(wr)))
         v = bpeApply(v, w).localCheckpoint(true)
-        // measurement seam (the SpanW lesson: profile THE loop, not a
-        // copy) — BpeProfile prints the per-round walls the flat-cost
-        // claim is pinned with
-        onRound(r, (System.nanoTime() - t0) / 1e9)
         r += 1
       }
     }
@@ -869,14 +863,12 @@ object TextQueries {
     * storage in r11; the BPE winner list and final word→rep table follow
     * in r12): `winners` keyed by merge_rank (the merge recipe a tokenizer
     * SERVICE ships), `reps` keyed by word with SMALL files so a batch
-    * probe's manifest pruning is a real subset. Version-keyed memo like
-    * every ensure* sibling.
+    * probe's manifest pruning is a real subset. Memoized in PlanCache
+    * like every ensure* sibling.
     */
-  private val bpeLake = VersionedMemo.paths[(String, String)](v => Seq(v._1, v._2))
-
   private[graft] def ensureBpeLake(s: org.apache.spark.sql.SparkSession,
                                    dir: String): (String, String) =
-    bpeLake.get(s, dir) {
+    PlanCache.memo(dir, "bpe_lake") {
       val base = Staging.freshBase("graft_bpe", dir).getPath
       val winners = s"$base/winners"; val reps = s"$base/reps"
       val (w, v) = bpeTrained(s, dir) // the one shared train (r12 advice)
@@ -1013,16 +1005,14 @@ object TextQueries {
       .toDF("doc_id", "main_text", "n_blocks", "n_chars")
   }
 
-  private val gzipShardStage = VersionedMemo.paths[String](Seq(_))
-
   /** Stage the documents corpus as 8 gzip JSONL shards — the compressed
-    * text container real corpora arrive in (done ONCE per (session, dir):
+    * text container real corpora arrive in (done ONCE per corpus dir:
     * the staging is the upstream exporter's role, not part of the
     * operator under test).
     */
   private[graft] def ensureGzipShards(s: org.apache.spark.sql.SparkSession,
                                       dir: String): String =
-    gzipShardStage.get(s, dir) {
+    PlanCache.memo(dir, "gzip_shards") {
       val shards = s"${Staging.freshBase("graft_gz", dir).getPath}/shards"
       graft.sources.GzipJsonl.writeShards(
         Tables.documents(s, dir).select("doc_id", "text", "lang", "n_chars"),
@@ -1061,15 +1051,13 @@ object TextQueries {
         sum("doc_id").as("sum_ids"))
   }
 
-  private val wetStage = VersionedMemo.paths[String](Seq(_))
-
   /** Stage the corpus as 8 WET shards (warcinfo leader + one gzip member
-    * per conversion record — the crawl-tooling shape), once per
-    * (session, dir).
+    * per conversion record — the crawl-tooling shape), once per corpus
+    * dir.
     */
   private[graft] def ensureWetShards(s: org.apache.spark.sql.SparkSession,
                                      dir: String): String =
-    wetStage.get(s, dir) {
+    PlanCache.memo(dir, "wet_shards") {
       val shards = s"${Staging.freshBase("graft_wet", dir).getPath}/shards"
       graft.sources.Warc.writeWetShards(
         Tables.documents(s, dir).select("doc_id", "text"), shards, shards = 8)

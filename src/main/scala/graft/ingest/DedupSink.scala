@@ -1,7 +1,6 @@
 package graft.ingest
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.StructType
@@ -143,11 +142,6 @@ object DedupSink {
     (perGroup.values.sum, if (groupCol.isDefined) perGroup else Map.empty)
   }
 
-  /** Unpersist the blocks behind an eager `localCheckpoint`. */
-  private def release(pinned: DataFrame): Unit =
-    pinned.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }
-      .foreach(_.unpersist(blocking = false))
-
   /** Append `batch` to the parquet sink at `path`, deduplicating on `key`.
     * Returns insert counts (total and, when `groupCol` is set, per group —
     * one entry per group, driver-safe).
@@ -221,6 +215,6 @@ object DedupSink {
         snapshot.write.mode("overwrite").parquet(path)
       }
       AppendResult(total, perGroup)
-    } finally pinned.foreach(release)
+    } finally pinned.foreach(graft.analytics.PlanCache.release)
   }
 }

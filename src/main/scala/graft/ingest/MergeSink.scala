@@ -145,6 +145,10 @@ object MergeSink {
     }
   }
 
+  /** [[currentVersion]] of each table, 0 for one with no commit yet. */
+  def currentVersions(paths: Seq[String]): Map[String, Long] =
+    paths.map(p => p -> currentVersion(p).getOrElse(0L)).toMap
+
   private final case class Manifest(schema: org.apache.spark.sql.types.StructType,
                                     files: Seq[FileStat],
                                     props: Map[String, String] = Map.empty)

@@ -39,7 +39,7 @@ class PurgeSpec extends AnyFunSuite {
     val sk = AnnLake.buildFullIndex(spark, dir, "graft_purge_ann",
       AnnLake.DefaultSaltTarget)
     val handle = AnnLake.IndexHandle(sk,
-      MergeSink.read(spark, sk.centroids).count())
+      MergeSink.read(spark, sk.centroids).count(), Map.empty)
     val gh = AnnGraphLake.ensureGraphLake(spark, dir)
     // dedup tier sinks warm through their normal ensure paths
     val bandSink = DedupQueries.ensureBandSink(spark, dir)
