@@ -30,7 +30,7 @@ object Verify {
     }
     rmRf(new java.io.File(outDir))
     new java.io.File(outDir).mkdirs()
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson())
     val timeoutSec = sys.env.getOrElse("SPARK_GRAFT_Q_TIMEOUT", "300").toInt
     var failed = List.empty[String]
     SparkEntry.queries.toSeq.sortBy(_._1)
@@ -57,22 +57,26 @@ object Verify {
     }
   }
 
-  /** oracle_sql.json content, JSON-escaped: backslash, quote, and ALL
-    * control chars (<0x20) — a tab or CR in builder-authored SQL would
+  /** oracle_sql.json content for the queries `keep` selects (all by
+    * default), in `SparkEntry.oracleSql`'s iteration order.
+    */
+  def oracleJson(keep: String => Boolean = _ => true): String =
+    SparkEntry.oracleSql.view.filterKeys(keep)
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+      .mkString("{", ",", "}")
+
+  /** A JSON string literal: backslash, quote, and ALL control chars
+    * (<0x20) escaped — a tab or CR in builder-authored SQL would
     * otherwise make the driver's json.load fail and silently zero the
     * round's correctness.
     */
-  def oracleJson: String = {
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-  }
+  private def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -318,21 +318,6 @@ object AnnGraphLake {
 
   // ---- shared graph-construction pieces (full, slice and batch paths) ---
 
-  /** Within-cell top-GraphM edges of `mem` (cell, vec_id, e, nrm) — the
-    * one pair-ranking every build path runs (ties by dst id).
-    */
-  private def topMEdges(mem: DataFrame): DataFrame = {
-    val pairs = mem.as("a")
-      .join(mem.as("b"),
-        col("a.cell") === col("b.cell") && col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"),
-        Vec.cosinePre(Vec.dot(col("a.e"), col("b.e")),
-          col("a.nrm"), col("b.nrm")).as("cosine"))
-    val w = Window.partitionBy("src").orderBy(col("cosine").desc, col("dst"))
-    pairs.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= GraphM).select("src", "dst")
-  }
-
   /** Per-cell entry ARRAY of `memEn` (cell, vec_id, en) against `cents`:
     * the MEDOID (dot-to-centroid argmax, ties lowest id) plus its ANTIPODE
     * (dot-to-medoid argmin, ties lowest id — the seed that reaches a
@@ -606,18 +591,16 @@ object AnnGraphLake {
     ()
   }
 
-  /** The beam walk over the LAKE tables — dataflow identical to
-    * `graphBeamParts` (same constants, same tiebreaks, so the in-plan
-    * oracle proves this plan too); every per-round fetch is a
-    * `readOverlapping` key read, exact via the inner join back.
+  /** The beam walk over the LAKE tables: [[AnnQueries.beamWalk]] with
+    * every fetch a `readOverlapping` key read (exact via the inner join
+    * back) and the lake's delta pin shape (see [[AnnQueries.BeamSource]]).
     */
   private[graft] def graphBeamLake(s: SparkSession, dir: String): DataFrame =
-    walkOn(s, dir, ensureGraphLake(s, dir))
+    beamParts(s, dir, ensureGraphLake(s, dir))._2
 
-  private[graft] def graphBeamIncr(s: SparkSession, dir: String): DataFrame =
-    walkOn(s, dir, ensureGraphIncrLake(s, dir))
-
-  private def walkOn(s: SparkSession, dir: String, h: Handle): DataFrame = {
+  /** The lake walk over `h`, with its cumulative scored set. */
+  private[analytics] def beamParts(s: SparkSession, dir: String,
+      h: Handle): (DataFrame, DataFrame) = {
     val sk = h.sinks
     // probes are QUERY-side input (the raw embedding column), normalized
     // exactly as the index build normalized the corpus
@@ -631,57 +614,29 @@ object AnnGraphLake {
     val pc = probeCells(probes.select(col("probe_id"), col("pen").as("en")),
       cents.select("cell", "ce"), nprobeFor(h.cells))
     // entry is tiny (≤ probes · nprobe · GraphEntries rows) but feeds TWO
-    // consumers — score()'s digest collect and its vector join — each of
-    // which would re-run the probe-routing subtree (r17, guide §2.4):
-    // checkpoint once, both read the materialized rows
+    // consumers — the vector fetch's digest collect and the scoring join —
+    // each of which would re-run the probe-routing subtree: checkpoint
+    // once, both read the materialized rows
     val entry = MergeSink.readOverlapping(s, sk.medoids, pc.select("cell"), Seq("cell"))
       .join(pc, Seq("cell"))
       .select(col("probe_id"), explode(col("entries")).as("nid")).distinct()
       .localCheckpoint(true)
-    // exact cosine of a candidate set: the candidates' vectors come from
-    // the manifest-pruned files their digests land in, never the table
-    def score(cand: DataFrame): DataFrame = {
-      val vecs = MergeSink.readOverlapping(s, sk.vectors,
+    beamWalk(BeamSource(
+      probes = probes.select("probe_id", "pe", "pnrm"),
+      entry = entry,
+      // the candidates' vectors come from the manifest-pruned files their
+      // digests land in, never the table
+      vectors = cand => MergeSink.readOverlapping(s, sk.vectors,
           cand.select(col("nid").as("vec_id")), Seq("vec_id"))
-        .select(col("vec_id").as("nid"), col("e"), col("nrm"))
-      cand.join(broadcast(probes.select("probe_id", "pe", "pnrm")), Seq("probe_id"))
-        .join(vecs, Seq("nid"))
-        .select(col("probe_id"), col("nid"),
-          Vec.cosinePre(Vec.dot(col("pe"), col("e")),
-            col("pnrm"), col("nrm")).as("cosine"))
-    }
-    // r17 loop shape (guide §2.4/§5): each round checkpoints the tiny
-    // per-round frames — beam (≤ probes·ef), fresh (≤ beam·M), and the
-    // scored DELTA — instead of re-materializing the whole accumulated
-    // score set every round. The historical `sc.union(...).localCheckpoint`
-    // rewrote all prior rounds' rows each round, and the un-checkpointed
-    // beam/fresh subtrees were each executed ~3× (once for the manifest
-    // digest collect inside readOverlapping, once per join consumer).
-    // `sc` stays a union of ≤ rounds+1 checkpointed frames: lineage depth
-    // is constant, nothing is recomputed, and every readOverlapping's
-    // digest collect reads materialized rows.
-    var sc = score(entry).localCheckpoint(true)
-    for (_ <- 1 to BeamRounds) {
-      val beamW = Window.partitionBy("probe_id")
-        .orderBy(col("cosine").desc, col("nid"))
-      val beam = sc.withColumn("rn", row_number().over(beamW))
-        .filter(col("rn") <= BeamEf).select("probe_id", "nid")
-        .localCheckpoint(true)
-      val es = MergeSink.readOverlapping(s, sk.edges,
-          beam.select(col("nid").as("src")), Seq("src"))
-        .select(col("src").as("nid"), col("dsts"))
-      val expanded = beam.join(es, Seq("nid"))
-        .select(col("probe_id"), explode(col("dsts")).as("nid")).distinct()
-      val fresh = expanded.join(sc.select("probe_id", "nid"),
-        Seq("probe_id", "nid"), "left_anti")
-        .localCheckpoint(true)
-      sc = sc.union(score(fresh).localCheckpoint(true))
-    }
-    val w = Window.partitionBy("probe_id").orderBy(col("cosine").desc, col("nid"))
-    sc.filter(col("nid") =!= col("probe_id"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= LshK)
-      .select(col("probe_id"), col("nid").as("neighbor_id"), col("cosine"), col("rank"))
+        .select(col("vec_id").as("nid"), col("e"), col("nrm")),
+      neighbours = { beam =>
+        val es = MergeSink.readOverlapping(s, sk.edges,
+            beam.select(col("nid").as("src")), Seq("src"))
+          .select(col("src").as("nid"), col("dsts"))
+        beam.join(es, Seq("nid"))
+          .select(col("probe_id"), explode(col("dsts")).as("nid"))
+      },
+      pinDelta = true))
   }
 
   /** Same oracle as the in-plan walk — the storage round trip must be
@@ -703,7 +658,7 @@ object AnnGraphLake {
       s"""WITH ${AnnQueries.VnCte},
          |${AnnLake.SliceCellsCte},
          |${AnnQueries.graphWalkSql}""".stripMargin) { (s, dir) =>
-      graphBeamIncr(s, dir)
+      beamParts(s, dir, ensureGraphIncrLake(s, dir))._2
     }
 
   val defs: Seq[QueryDef] = Seq(graphLake, graphIncr)

@@ -1071,18 +1071,26 @@ object AnnQueries {
       val (cells, _) = ivfParts(s, dir)
       requireBoundedOccupancy(cells, "graphEdges")
       val v = normalized(s, dir)
-      val mem = cells.join(v.select(col("vec_id"), col("e"), col("nrm")), Seq("vec_id"))
-      val pairs = mem.as("a")
-        .join(mem.as("b"),
-          col("a.cell") === col("b.cell") && col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"),
-          Vec.cosinePre(Vec.dot(col("a.e"), col("b.e")),
-            col("a.nrm"), col("b.nrm")).as("cosine"))
-      val w = Window.partitionBy("src").orderBy(col("cosine").desc, col("dst"))
-      pairs.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= GraphM)
-        .select("src", "dst")
+      topMEdges(cells.join(v.select(col("vec_id"), col("e"), col("nrm")), Seq("vec_id")))
     }
+
+  /** Within-cell top-GraphM edges of `mem` (cell, vec_id, e, nrm) — the
+    * one pair-ranking every graph build runs, in-plan and lake alike
+    * (ties by dst id).
+    */
+  private[analytics] def topMEdges(
+      mem: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val pairs = mem.as("a")
+      .join(mem.as("b"),
+        col("a.cell") === col("b.cell") && col("a.vec_id") =!= col("b.vec_id"))
+      .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"),
+        Vec.cosinePre(Vec.dot(col("a.e"), col("b.e")),
+          col("a.nrm"), col("b.nrm")).as("cosine"))
+    val w = Window.partitionBy("src").orderBy(col("cosine").desc, col("dst"))
+    pairs.withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= GraphM)
+      .select("src", "dst")
+  }
 
   /** Per-cell entry points (the search's "layer 0 seeds"): the cell
     * MEDOID — highest dot against the trained centroid, ties lowest id —
@@ -1133,49 +1141,67 @@ object AnnQueries {
         carr)
     }
 
-  /** The beam search, exposed with its cumulative candidate set so the
-    * spec can pin the candidate-volume law (|scored| per probe ≤ nprobe +
-    * rounds·ef·M — independent of the corpus size).
+  /** Where one beam walk reads from: the probes (probe_id, pe, pnrm), the
+    * round-0 entry rows (probe_id, nid), the candidates' vectors
+    * (`vectors(cand)` → nid, e, nrm) and the beam's neighbour rows
+    * (`neighbours(beam)` → probe_id, nid). [[beamWalk]] is the one loop
+    * over any of them.
+    *
+    * `pinDelta` is the back end's pin shape, chosen per back end because
+    * each was measured on its own:
+    *  - in-plan (false): each round checkpoints the WHOLE scored set. The
+    *    rounds re-derive everything from two plain frames, so the
+    *    whole-set checkpoint keeps each round's window input one
+    *    materialized scan; the delta shape measured slower here (1.1 →
+    *    1.9 s at sf0.1).
+    *  - lake (true): every fetch is a `readOverlapping` key read, which
+    *    collects its keys on the driver, so the frames those reads consume
+    *    (beam, fresh) are checkpointed first and each round pins only its
+    *    scored DELTA; the scored set stays a union of ≤ rounds+1
+    *    checkpointed frames and nothing upstream re-runs.
     */
-  private[analytics] def graphBeamParts(s: org.apache.spark.sql.SparkSession,
-      dir: String)
+  private[analytics] final case class BeamSource(
+      probes: org.apache.spark.sql.DataFrame,
+      entry: org.apache.spark.sql.DataFrame,
+      vectors: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+      neighbours: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+      pinDelta: Boolean)
+
+  /** The beam search — rank the beam, expand it, anti-join the unseen,
+    * score them, union, final top-k — exposed with its cumulative
+    * candidate set so the spec can pin the candidate-volume law (|scored|
+    * per probe ≤ GraphEntries·nprobe + rounds·ef·M — independent of the
+    * corpus size) for every back end.
+    */
+  private[analytics] def beamWalk(src: BeamSource)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val v = normalized(s, dir)
-    val probes = v.filter(col("vec_id") < ProbeCount)
-      .select(col("vec_id").as("probe_id"), col("e").as("pe"), col("nrm").as("pnrm"))
-    val (_, pcells) = ivfParts(s, dir)
-    val edges = graphEdges(s, dir)
-    val medoids = cellMedoids(s, dir)
+    def pin(df: org.apache.spark.sql.DataFrame) =
+      if (src.pinDelta) df.localCheckpoint(true) else df
     // exact cosine of a candidate set against its probes — every scored
     // row costs one dim-length fold; the law bounds how many there are
-    def score(cand: org.apache.spark.sql.DataFrame) = cand
-      .join(broadcast(probes), Seq("probe_id"))
-      .join(v.select(col("vec_id").as("nid"), col("e"), col("nrm")), Seq("nid"))
-      .select(col("probe_id"), col("nid"),
-        Vec.cosinePre(Vec.dot(col("pe"), col("e")), col("pnrm"), col("nrm")).as("cosine"))
-    // round 0: the probed cells' medoids
-    val entry = pcells.join(medoids, Seq("cell"))
-      .select(col("probe_id"), col("entry").as("nid")).distinct()
-    // each round materializes eagerly (the BPE-loop posture): the frames
-    // are |probes|·ef-sized, and the checkpoint keeps the iterated plan
-    // from nesting R joins deep. r17 note: the lake walk's delta-only
-    // checkpoint shape (walkOn) was tried here and MEASURED SLOWER
-    // (1.1 → 1.9 s at sf0.1) — the in-plan rounds re-derive everything
-    // from two plain frames, so the whole-set checkpoint is what keeps
-    // each round's window input a single materialized scan; kept as is.
-    var sc = score(entry).localCheckpoint(true)
+    def score(cand: org.apache.spark.sql.DataFrame) = {
+      val vecs = src.vectors(cand)
+      cand.join(broadcast(src.probes), Seq("probe_id"))
+        .join(vecs, Seq("nid"))
+        .select(col("probe_id"), col("nid"),
+          Vec.cosinePre(Vec.dot(col("pe"), col("e")), col("pnrm"), col("nrm")).as("cosine"))
+    }
+    // every round pins (which frames: BeamSource.pinDelta), so the
+    // iterated plan never nests BeamRounds joins deep
+    var sc = score(src.entry).localCheckpoint(true)
     for (_ <- 1 to BeamRounds) {
       val beamW = Window.partitionBy("probe_id")
         .orderBy(col("cosine").desc, col("nid"))
-      val beam = sc.withColumn("rn", row_number().over(beamW))
-        .filter(col("rn") <= BeamEf).select("probe_id", "nid")
-      val expanded = beam.join(edges, beam("nid") === edges("src"))
-        .select(col("probe_id"), col("dst").as("nid")).distinct()
+      val beam = pin(sc.withColumn("rn", row_number().over(beamW))
+        .filter(col("rn") <= BeamEf).select("probe_id", "nid"))
+      val expanded = src.neighbours(beam).distinct()
       // only UNSEEN candidates pay a scoring fold (and the anti-join keeps
       // the cumulative set a set, so the final window is deterministic)
-      val fresh = expanded.join(sc.select("probe_id", "nid"),
-        Seq("probe_id", "nid"), "left_anti")
-      sc = sc.union(score(fresh)).localCheckpoint(true)
+      val fresh = pin(expanded.join(sc.select("probe_id", "nid"),
+        Seq("probe_id", "nid"), "left_anti"))
+      sc =
+        if (src.pinDelta) sc.union(score(fresh).localCheckpoint(true))
+        else sc.union(score(fresh)).localCheckpoint(true)
     }
     val w = Window.partitionBy("probe_id").orderBy(col("cosine").desc, col("nid"))
     val result = sc.filter(col("nid") =!= col("probe_id"))
@@ -1183,6 +1209,27 @@ object AnnQueries {
       .filter(col("rank") <= LshK)
       .select(col("probe_id"), col("nid").as("neighbor_id"), col("cosine"), col("rank"))
     (sc, result)
+  }
+
+  /** The in-plan walk: probes and vectors from the normalized corpus,
+    * entries from the probed cells' medoids, neighbours from the cached
+    * edge table.
+    */
+  private[analytics] def graphBeamParts(s: org.apache.spark.sql.SparkSession,
+      dir: String)
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    val v = normalized(s, dir)
+    val (_, pcells) = ivfParts(s, dir)
+    val edges = graphEdges(s, dir)
+    beamWalk(BeamSource(
+      probes = v.filter(col("vec_id") < ProbeCount)
+        .select(col("vec_id").as("probe_id"), col("e").as("pe"), col("nrm").as("pnrm")),
+      entry = pcells.join(cellMedoids(s, dir), Seq("cell"))
+        .select(col("probe_id"), col("entry").as("nid")).distinct(),
+      vectors = _ => v.select(col("vec_id").as("nid"), col("e"), col("nrm")),
+      neighbours = beam => beam.join(edges, beam("nid") === edges("src"))
+        .select(col("probe_id"), col("dst").as("nid")),
+      pinDelta = false))
   }
 
   /** The generated beam rounds — one CTE triple per hop, the tx_bpe

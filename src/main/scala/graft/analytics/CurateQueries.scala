@@ -873,6 +873,23 @@ object CurateQueries {
        |LEFT JOIN crossm cm ON b.doc_id = cm.doc_id
        |LEFT JOIN ilosers il ON b.doc_id = il.doc_id
        |LEFT JOIN cont ct ON b.doc_id = ct.doc_id""".stripMargin) { (s, dir) =>
+    incrementalVerdicts(s, dir,
+      corpusFp = _ => Tables.documents(s, dir).filter(col("doc_id") % 5 =!= 0)
+        .select(md5(col("text")).as("fp")).distinct(),
+      pairs = () => DedupQueries.nearDupPairs(s, dir))
+  }
+
+  /** The incremental pipeline's one dataflow — quality gate, exact dedup,
+    * near-dup cross matches and batch-internal losers, decontamination and
+    * the per-doc verdict — shared by both twins. They differ only in where
+    * the corpus side comes from: `corpusFp(clean)` gives the corpus
+    * fingerprints (fp) a cleaned batch is checked against, and `pairs()`
+    * the verified near-dup pairs (doc_a, doc_b) touching the batch.
+    */
+  private def incrementalVerdicts(s: org.apache.spark.sql.SparkSession,
+      dir: String,
+      corpusFp: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+      pairs: () => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val isNew = col("doc_id") % 5 === 0
     // the batch frame feeds SIX verdict branches; materialize it once
     // (eager localCheckpoint — per-run, nothing leaks across invocations)
@@ -882,24 +899,22 @@ object CurateQueries {
       .select(col("doc_id"), col("lang"), col("text"),
         TextQueries.qualityExpr(col("text")).as("quality"))
       .localCheckpoint(true)
-    val corpusFp = Tables.documents(s, dir).filter(!isNew)
-      .select(md5(col("text")).as("fp")).distinct()
     val clean = b.filter(col("quality") >= 0.2)
       .select(col("doc_id"), md5(col("text")).as("fp"), col("quality"))
       .localCheckpoint(true)
     val ikeep = clean.groupBy("fp").agg(min("doc_id").as("keep"))
     val exacts = clean
-      .join(corpusFp.withColumn("in_corp", lit(1)), Seq("fp"), "left")
+      .join(corpusFp(clean).withColumn("in_corp", lit(1)), Seq("fp"), "left")
       .join(ikeep, Seq("fp"), "left")
       .filter(col("in_corp").isNotNull || col("doc_id") =!= col("keep"))
       .select(col("doc_id").as("ex_id"))
-    val pairs = DedupQueries.nearDupPairs(s, dir)
-    val crossm = pairs.filter((col("doc_a") % 5 === 0) =!= (col("doc_b") % 5 === 0))
+    val pr = pairs()
+    val crossm = pr.filter((col("doc_a") % 5 === 0) =!= (col("doc_b") % 5 === 0))
       .select(when(col("doc_a") % 5 === 0, col("doc_a")).otherwise(col("doc_b"))
         .as("cm_id"))
       .distinct()
     val cq = clean.select(col("doc_id"), col("quality"))
-    val ipair = pairs.filter(col("doc_a") % 5 === 0 && col("doc_b") % 5 === 0)
+    val ipair = pr.filter(col("doc_a") % 5 === 0 && col("doc_b") % 5 === 0)
       .join(cq.select(col("doc_id").as("doc_a"), col("quality").as("qa")), "doc_a")
       .join(cq.select(col("doc_id").as("doc_b"), col("quality").as("qb")), "doc_b")
     val ilosers = ipair.select(when(col("qa") < col("qb") ||
@@ -962,60 +977,19 @@ object CurateQueries {
   val incrementalPipelineLake: QueryDef = QueryDef(
     "pipe_incremental_corpus_lake", incrementalPipeline.oracle.get) { (s, dir) =>
     val fpSink = ensureFpSink(s, dir)
-    val isNew = col("doc_id") % 5 === 0
-    val b = Tables.documents(s, dir).filter(isNew)
-      .select(col("doc_id"), col("lang"), col("text"),
-        TextQueries.qualityExpr(col("text")).as("quality"))
-      .localCheckpoint(true)
-    val clean = b.filter(col("quality") >= 0.2)
-      .select(col("doc_id"), md5(col("text")).as("fp"), col("quality"))
-      .localCheckpoint(true)
-    // manifest-pruned fingerprint probe: only files whose key-digest
-    // interval brackets some batch fp are opened; the left join is the
-    // residual filter over the pruned files' other rows. cnt > 0 is the
-    // delete-path residual (the window-probe convention): a refcount-
-    // zeroed fingerprint is dead the instant the decrement commits.
-    val corpusFp = MergeSink.readOverlapping(s, fpSink, clean.select("fp"), Seq("fp"))
-      .filter(col("cnt") > 0).select(col("fp"))
-    val ikeep = clean.groupBy("fp").agg(min("doc_id").as("keep"))
-    val exacts = clean
-      .join(corpusFp.withColumn("in_corp", lit(1)), Seq("fp"), "left")
-      .join(ikeep, Seq("fp"), "left")
-      .filter(col("in_corp").isNotNull || col("doc_id") =!= col("keep"))
-      .select(col("doc_id").as("ex_id"))
-    // verified near-dup pairs touching the batch, O(batch) via the lake
-    // band postings — corpus-corpus pairs are never derived
-    val pairs = DedupQueries.deltaPairsLake(s, dir)
-      .select("doc_a", "doc_b").localCheckpoint(true)
-    val crossm = pairs.filter((col("doc_a") % 5 === 0) =!= (col("doc_b") % 5 === 0))
-      .select(when(col("doc_a") % 5 === 0, col("doc_a")).otherwise(col("doc_b"))
-        .as("cm_id"))
-      .distinct()
-    val cq = clean.select(col("doc_id"), col("quality"))
-    val ipair = pairs.filter(col("doc_a") % 5 === 0 && col("doc_b") % 5 === 0)
-      .join(cq.select(col("doc_id").as("doc_a"), col("quality").as("qa")), "doc_a")
-      .join(cq.select(col("doc_id").as("doc_b"), col("quality").as("qb")), "doc_b")
-    val ilosers = ipair.select(when(col("qa") < col("qb") ||
-        (col("qa") === col("qb") && col("doc_a") > col("doc_b")),
-        col("doc_a")).otherwise(col("doc_b")).as("il_id")).distinct()
-    val probes = Tables.documents(s, dir)
-      .filter(col("doc_id") % 50 === 0 && col("doc_id") < 1000000L)
-      .select(col("doc_id").as("eval_id"),
-        concat_ws(" ", slice(split(col("text"), " "), 1, 10)).as("probe"))
-    val cont = b.join(broadcast(probes),
-        instr(col("text"), col("probe")) > 0 && col("doc_id") =!= col("eval_id"),
-        "left_semi")
-      .select(col("doc_id").as("ct_id"))
-    b.join(exacts, col("doc_id") === col("ex_id"), "left")
-      .join(crossm, col("doc_id") === col("cm_id"), "left")
-      .join(ilosers, col("doc_id") === col("il_id"), "left")
-      .join(cont, col("doc_id") === col("ct_id"), "left")
-      .select(col("doc_id"), col("lang"),
-        when(col("quality") < 0.2, "quality")
-          .when(col("ex_id").isNotNull, "exact_dup")
-          .when(col("cm_id").isNotNull || col("il_id").isNotNull, "near_dup")
-          .when(col("ct_id").isNotNull, "contaminated")
-          .otherwise("kept").as("verdict"))
+    incrementalVerdicts(s, dir,
+      // manifest-pruned fingerprint probe: only files whose key-digest
+      // interval brackets some batch fp are opened; the left join is the
+      // residual filter over the pruned files' other rows. cnt > 0 is the
+      // delete-path residual (the window-probe convention): a refcount-
+      // zeroed fingerprint is dead the instant the decrement commits.
+      corpusFp = clean =>
+        MergeSink.readOverlapping(s, fpSink, clean.select("fp"), Seq("fp"))
+          .filter(col("cnt") > 0).select(col("fp")),
+      // verified near-dup pairs touching the batch, O(batch) via the lake
+      // band postings — corpus-corpus pairs are never derived
+      pairs = () => DedupQueries.deltaPairsLake(s, dir)
+        .select("doc_a", "doc_b").localCheckpoint(true))
   }
 
   val defs: Seq[QueryDef] =

@@ -453,15 +453,7 @@ object DedupQueries {
 
   val componentsStar: QueryDef = QueryDef(
     "dd_components_star",
-    s"""WITH RECURSIVE $PairsCteSql,
-       |sym AS (SELECT doc_a AS u, doc_b AS v FROM verified
-       |        UNION SELECT doc_b, doc_a FROM verified),
-       |reach(u, v) AS (
-       |  SELECT u, v FROM sym
-       |  UNION
-       |  SELECT r.u, e.v FROM reach r JOIN sym e ON r.v = e.u)
-       |SELECT u AS doc_id, least(u, MIN(v)) AS component
-       |FROM reach GROUP BY u""".stripMargin) { (s, dir) =>
+    components.oracle.get) { (s, dir) =>
     starComponents(nearDupPairs(s, dir))
   }
 
@@ -521,32 +513,11 @@ object DedupQueries {
     val deltaPairs = pairs.filter(isNewA || isNewB)
     // the corpus cluster table (the lake's precomputed fixed point)
     val corpusLabels = starComponents(corpusPairs).localCheckpoint(true)
-    // contract corpus endpoints to their labels; batch endpoints keep ids
-    def contracted(side: String, lbl: String) =
-      corpusLabels.select(col("doc_id").as(side), col("component").as(lbl))
-    val reduced = deltaPairs
-      .join(contracted("doc_a", "la"), Seq("doc_a"), "left")
-      .join(contracted("doc_b", "lb"), Seq("doc_b"), "left")
-      .select(
-        when(isNewA, col("doc_a")).otherwise(coalesce(col("la"), col("doc_a"))).as("doc_a"),
-        when(isNewB, col("doc_b")).otherwise(coalesce(col("lb"), col("doc_b"))).as("doc_b"))
-      .filter(col("doc_a") =!= col("doc_b"))
-      .distinct()
-    val reducedLabels = starComponents(reduced).localCheckpoint(true)
-    // batch verdicts: every batch doc, contracted label or self
-    val batchDocs = Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
-      .select(col("doc_id"))
-    val batchOut = batchDocs
-      .join(reducedLabels, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("component"), col("doc_id")).as("component"))
+    val (reducedLabels, batchOut) = contractDelta(s, dir, deltaPairs, corpusLabels)
     // corpus update set: docs whose (possibly singleton) corpus label was
     // remapped by the delta propagation. Corpus docs only in delta pairs
     // have corpus label = self and appear as their own reduced node.
-    val deltaCorpusSingles = deltaPairs
-      .select(when(!isNewA, col("doc_a")).as("doc_id"))
-      .unionByName(deltaPairs.select(when(!isNewB, col("doc_b")).as("doc_id")))
-      .filter(col("doc_id").isNotNull)
-      .distinct()
+    val deltaCorpusSingles = corpusEndpoints(deltaPairs)
       .join(corpusLabels, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("doc_id").as("component"))
     val corpusOut = corpusLabels.unionByName(deltaCorpusSingles)
@@ -556,6 +527,43 @@ object DedupQueries {
       .select(col("doc_id"), col("new_label").as("component"))
     batchOut.unionByName(corpusOut)
   }
+
+  /** The delta half both dd_incr_components twins run: contract each
+    * pair's corpus endpoint to its label in `labels` (doc_id, component;
+    * batch endpoints keep their ids), star-contract the reduced delta
+    * graph, and give every batch doc its label or itself. Returns the
+    * reduced labels (doc_id, component) — the corpus update set's input —
+    * and the batch rows.
+    */
+  private def contractDelta(s: org.apache.spark.sql.SparkSession, dir: String,
+      deltaPairs: DataFrame, labels: DataFrame): (DataFrame, DataFrame) = {
+    val isNewA = col("doc_a") % 5 === 0
+    val isNewB = col("doc_b") % 5 === 0
+    def contracted(side: String, lbl: String) =
+      labels.select(col("doc_id").as(side), col("component").as(lbl))
+    val reduced = deltaPairs
+      .join(contracted("doc_a", "la"), Seq("doc_a"), "left")
+      .join(contracted("doc_b", "lb"), Seq("doc_b"), "left")
+      .select(
+        when(isNewA, col("doc_a")).otherwise(coalesce(col("la"), col("doc_a"))).as("doc_a"),
+        when(isNewB, col("doc_b")).otherwise(coalesce(col("lb"), col("doc_b"))).as("doc_b"))
+      .filter(col("doc_a") =!= col("doc_b"))
+      .distinct()
+    val reducedLabels = starComponents(reduced).localCheckpoint(true)
+    val batchDocs = Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
+      .select(col("doc_id"))
+    val batchOut = batchDocs
+      .join(reducedLabels, Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("component"), col("doc_id")).as("component"))
+    (reducedLabels, batchOut)
+  }
+
+  /** The distinct corpus-side endpoints (doc_id) of the delta pairs. */
+  private def corpusEndpoints(deltaPairs: DataFrame): DataFrame =
+    deltaPairs.select(when(col("doc_a") % 5 =!= 0, col("doc_a")).as("doc_id"))
+      .unionByName(deltaPairs.select(when(col("doc_b") % 5 =!= 0, col("doc_b")).as("doc_id")))
+      .filter(col("doc_id").isNotNull)
+      .distinct()
 
   /** Process-local memo of the corpus cluster lake tables (the k13 sink's
     * contract): the star-contracted corpus labels persisted TWICE — keyed
@@ -585,18 +593,6 @@ object DedupQueries {
       (byDoc, byComp)
     }
 
-  /** dd_incr_components with the corpus cluster table read from the LAKE:
-    * the precomputed labels live in MergeSink tables (doc-keyed for the
-    * supernode contraction, component-keyed postings for the changed-label
-    * fan-out), and the batch update touches O(batch-adjacent) FILES of
-    * each — `readOverlapping` prunes by the touched doc ids / remapped
-    * labels, so neither access reads the cluster table (the in-plan
-    * variant recomputes the whole corpus fixed point per run; this is the
-    * MERGE-maintained daily shape). Delta pairs come from the batch band
-    * self-join plus the lake band-posting probe (dd_incr_lsh_lake's
-    * candidates) — the same verified pair set, derived O(batch).
-    * Identical semantics and oracle to dd_incr_components.
-    */
   /** Process-local memo of the corpus SHINGLE lake table (doc_id-keyed):
     * the verify stage's corpus-side input as a MergeSink table, so exact
     * Jaccard over matched pairs reads O(touched-docs) FILES instead of the
@@ -669,36 +665,29 @@ object DedupQueries {
     verifyJaccardLake(s, dir, bb.unionByName(bc).distinct())
   }
 
+  /** dd_incr_components with the corpus cluster table read from the LAKE:
+    * the precomputed labels live in MergeSink tables (doc-keyed for the
+    * supernode contraction, component-keyed postings for the changed-label
+    * fan-out), and the batch update touches O(batch-adjacent) FILES of
+    * each — `readOverlapping` prunes by the touched doc ids / remapped
+    * labels, so neither access reads the cluster table (the in-plan
+    * variant recomputes the whole corpus fixed point per run; this is the
+    * MERGE-maintained daily shape). Delta pairs come from the batch band
+    * self-join plus the lake band-posting probe (dd_incr_lsh_lake's
+    * candidates) — the same verified pair set, derived O(batch).
+    * Identical semantics and oracle to dd_incr_components.
+    */
   val incrComponentsLake: QueryDef = QueryDef(
     "dd_incr_components_lake", incrComponents.oracle.get) { (s, dir) =>
     val (byDoc, byComp) = ensureLabelSinks(s, dir)
     val deltaPairs = deltaPairsLake(s, dir)
       .select("doc_a", "doc_b").localCheckpoint(true)
-    val isNewA = col("doc_a") % 5 === 0
-    val isNewB = col("doc_b") % 5 === 0
     // PRUNED label lookup for the touched corpus endpoints
-    val touched = deltaPairs.select(when(!isNewA, col("doc_a")).as("doc_id"))
-      .unionByName(deltaPairs.select(when(!isNewB, col("doc_b")).as("doc_id")))
-      .filter(col("doc_id").isNotNull).distinct().localCheckpoint(true)
+    val touched = corpusEndpoints(deltaPairs).localCheckpoint(true)
     val touchedLabels = MergeSink.readOverlapping(s, byDoc, touched, Seq("doc_id"))
       .join(touched, Seq("doc_id")) // residual: pruned files hold other rows too
       .localCheckpoint(true)
-    def contracted(side: String, lbl: String) =
-      touchedLabels.select(col("doc_id").as(side), col("component").as(lbl))
-    val reduced = deltaPairs
-      .join(contracted("doc_a", "la"), Seq("doc_a"), "left")
-      .join(contracted("doc_b", "lb"), Seq("doc_b"), "left")
-      .select(
-        when(isNewA, col("doc_a")).otherwise(coalesce(col("la"), col("doc_a"))).as("doc_a"),
-        when(isNewB, col("doc_b")).otherwise(coalesce(col("lb"), col("doc_b"))).as("doc_b"))
-      .filter(col("doc_a") =!= col("doc_b"))
-      .distinct()
-    val reducedLabels = starComponents(reduced).localCheckpoint(true)
-    val batchDocs = Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
-      .select(col("doc_id"))
-    val batchOut = batchDocs
-      .join(reducedLabels, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("component"), col("doc_id")).as("component"))
+    val (reducedLabels, batchOut) = contractDelta(s, dir, deltaPairs, touchedLabels)
     // labels the delta propagation MOVED (reduced node ≠ its new label)
     val remaps = reducedLabels
       .select(col("doc_id").as("component"), col("component").as("new_label"))
@@ -941,11 +930,16 @@ object DedupQueries {
       // orient as (new, corpus) and restore after the verify
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    verifyJaccard(s, dir, cand)
-      .groupBy(col("doc_a").as("new_doc"))
+    perNewDoc(verifyJaccard(s, dir, cand))
+  }
+
+  /** Both dd_incr_lsh twins' summary of the verified (new, corpus) pairs:
+    * per new doc its lowest-id keeper, best Jaccard and match count.
+    */
+  private def perNewDoc(verified: DataFrame): DataFrame =
+    verified.groupBy(col("doc_a").as("new_doc"))
       .agg(min("doc_b").as("keeper"), max("jaccard").as("best_j"),
         count(lit(1)).as("n_matches"))
-  }
 
   /** Process-local memo of the corpus band-postings lake table (same
     * contract as the k13 sink): building the PRECOMPUTED corpus index is
@@ -1256,10 +1250,7 @@ object DedupQueries {
     "dd_incr_lsh_lake", IncrLshSql) { (s, dir) =>
     // verify reads the corpus shingles from the LAKE too (pruned to the
     // candidates' touched doc ids) — no corpus-wide artifact in this plan
-    verifyJaccardLake(s, dir, incrLshCandidatesLake(s, dir))
-      .groupBy(col("doc_a").as("new_doc"))
-      .agg(min("doc_b").as("keeper"), max("jaccard").as("best_j"),
-        count(lit(1)).as("n_matches"))
+    perNewDoc(verifyJaccardLake(s, dir, incrLshCandidatesLake(s, dir)))
   }
 
   /** The K1-K8 WRITE PATH itself, oracle-checked: append the same batch
@@ -1980,9 +1971,17 @@ object DedupQueries {
        |  md5(string_agg(s, ' ' ORDER BY pos)) AS kept_fp
        |FROM kept GROUP BY doc_id, n_spans""".stripMargin) { (s, dir) =>
     val spans = spanTable(s, dir)
-    val batch = spans.filter(col("doc_id") % 5 === 0)
-    val corp = spans.filter(col("doc_id") % 5 =!= 0 && col("nw") === SpanW)
-      .select(col("s")).distinct()
+    keptSpans(spans.filter(col("doc_id") % 5 === 0),
+      spans.filter(col("doc_id") % 5 =!= 0 && col("nw") === SpanW)
+        .select(col("s")).distinct())
+  }
+
+  /** Both dd_incr_span twins' dataflow over the batch's spans and the
+    * corpus span set `corp` (s): batch-internal first occurrences, the
+    * spans that are neither corpus spans nor repeats, and the per-doc
+    * rollup.
+    */
+  private def keptSpans(batch: DataFrame, corp: DataFrame): DataFrame = {
     val key = col("doc_id") * lit(SpanKeyShift) + col("pos")
     val firsts = batch.filter(col("nw") === SpanW)
       .groupBy("s").agg(min(key).as("first_key"))
@@ -2037,24 +2036,12 @@ object DedupQueries {
     val sink = ensureSpanSink(s, dir)
     val batch = spanTable(s, dir).filter(col("doc_id") % 5 === 0)
     // manifest-pruned corpus read; pruned files hold other spans too, so
-    // the existence join below is the residual filter. cnt > 0 makes a
+    // the existence join in keptSpans is the residual filter. cnt > 0 makes a
     // refcount-zeroed window dead before its physical prune commits
     // (incrSubstrLake's fail-closed residual).
-    val corp = MergeSink.readOverlapping(s, sink, batch.select("s"), Seq("s"))
-      .filter(col("cnt") > 0).select(col("s"))
-    val key = col("doc_id") * lit(SpanKeyShift) + col("pos")
-    val firsts = batch.filter(col("nw") === SpanW)
-      .groupBy("s").agg(min(key).as("first_key"))
-    batch
-      .join(corp.withColumn("in_corp", lit(1)), Seq("s"), "left")
-      .join(firsts, Seq("s"), "left")
-      .filter(col("in_corp").isNull &&
-        (col("first_key").isNull || key === col("first_key")))
-      .groupBy("doc_id", "n_spans")
-      .agg(count(lit(1)).as("n_kept"),
-        md5(array_join(
-          transform(array_sort(collect_list(struct(col("pos"), col("s")))),
-            x => x.getField("s")), " ")).as("kept_fp"))
+    keptSpans(batch,
+      MergeSink.readOverlapping(s, sink, batch.select("s"), Seq("s"))
+        .filter(col("cnt") > 0).select(col("s")))
   }
 
   /** Blocked fuzzy entity resolution — the record-linkage operator

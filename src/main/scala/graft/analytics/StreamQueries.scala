@@ -149,10 +149,7 @@ object StreamQueries {
     */
   val transformWithStateQ: QueryDef = QueryDef(
     "ev_transform_with_state",
-    """SELECT user_id, COUNT(*) AS n_events,
-      |  CAST(epoch_ms(MIN(ts)) AS BIGINT) AS first_ms,
-      |  CAST(epoch_ms(MAX(ts)) AS BIGINT) AS last_ms
-      |FROM events GROUP BY user_id""".stripMargin) { (s, dir) =>
+    statefulState.oracle.get) { (s, dir) =>
     val (src, sink, ckpt) = Staging.stageEvents("graft_tws", dir)
     EventsStream.transformWithStateCounts(s, src, sink, ckpt)
     s.read.parquet(sink).select("user_id", "n_events", "first_ms", "last_ms")
@@ -167,10 +164,7 @@ object StreamQueries {
     */
   val streamMergeSink: QueryDef = QueryDef(
     "ev_stream_merge_sink",
-    """SELECT user_id, COUNT(*) AS n_events,
-      |  CAST(epoch_ms(MIN(ts)) AS BIGINT) AS first_ms,
-      |  CAST(epoch_ms(MAX(ts)) AS BIGINT) AS last_ms
-      |FROM events GROUP BY user_id""".stripMargin) { (s, dir) =>
+    statefulState.oracle.get) { (s, dir) =>
     val (src, sink, ckpt) = Staging.stageEvents("graft_sm", dir)
     EventsStream.statefulCountsMerge(s, src, sink, ckpt)
     EventsStream.statefulCountsMerge(s, src, sink, s"$ckpt-replay") // replay: no-op
@@ -230,9 +224,7 @@ object StreamQueries {
     */
   val streamDedupWm: QueryDef = QueryDef(
     "ev_stream_dedup_wm",
-    """SELECT event_id, user_id, event_type,
-      |  CAST(epoch_ms(ts) AS BIGINT) AS ms
-      |FROM events""".stripMargin) { (s, dir) =>
+    streamDedup.oracle.get) { (s, dir) =>
     val (src, sink, ckpt) = Staging.stageEvents("graft_sdw", dir)
     val redelivered = graft.sources.EventsSource.stageInto(
       java.nio.file.Paths.get(s"$dir/events.parquet"),
@@ -377,31 +369,7 @@ object StreamQueries {
     */
   val streamFunnelQ: QueryDef = QueryDef(
     "ev_stream_funnel",
-    """WITH u AS (
-      |  SELECT user_id,
-      |    MIN(CASE WHEN event_type = 'view' THEN ts END) AS ts1,
-      |    list_filter(list(CASE WHEN event_type = 'click' THEN ts END), x -> x IS NOT NULL) AS clicks,
-      |    list_filter(list(CASE WHEN event_type = 'purchase' THEN ts END), x -> x IS NOT NULL) AS purchases
-      |  FROM events GROUP BY user_id),
-      |steps AS (
-      |  SELECT user_id, ts1,
-      |    list_aggregate(list_filter(clicks, x -> x > ts1), 'min') AS ts2
-      |  FROM u),
-      |steps3 AS (
-      |  SELECT u.user_id, s.ts1, s.ts2,
-      |    list_aggregate(list_filter(u.purchases, x -> x > s.ts2), 'min') AS ts3
-      |  FROM u JOIN steps s USING (user_id)),
-      |depth AS (
-      |  SELECT user_id,
-      |    CASE WHEN ts3 IS NOT NULL THEN 3 WHEN ts2 IS NOT NULL THEN 2
-      |         WHEN ts1 IS NOT NULL THEN 1 ELSE 0 END AS depth,
-      |    CASE WHEN ts3 IS NOT NULL
-      |         THEN epoch_ms(ts3) - epoch_ms(ts1) END AS ms_to_convert
-      |  FROM steps3)
-      |SELECT depth, COUNT(*) AS n_users,
-      |  CAST(CAST(SUM(ms_to_convert) AS DOUBLE) / COUNT(ms_to_convert) AS DOUBLE)
-      |    AS avg_ms_to_convert
-      |FROM depth GROUP BY depth""".stripMargin) { (s, dir) =>
+    funnel.oracle.get) { (s, dir) =>
     val (src, sink, ckpt) = Staging.stageEvents("graft_fun", dir)
     EventsStream.streamFunnel(s, src, sink, ckpt)
     s.read.parquet(sink)
@@ -799,22 +767,7 @@ object StreamQueries {
 
   val streamSessionTimeout: QueryDef = QueryDef(
     "ev_stream_session_timeout",
-    """WITH m AS (
-      |  SELECT user_id, ts,
-      |    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-      |           OR epoch_ms(ts) - epoch_ms(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800000
-      |         THEN 1 ELSE 0 END AS new_s,
-      |    event_id
-      |  FROM events),
-      |s AS (
-      |  SELECT user_id, ts,
-      |    CAST(SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-      |  FROM m)
-      |SELECT user_id,
-      |  CAST(epoch_ms(MIN(ts)) AS BIGINT) AS start_ms,
-      |  CAST(epoch_ms(MAX(ts)) + 1800000 AS BIGINT) AS end_ms,
-      |  COUNT(*) AS n_events
-      |FROM s GROUP BY user_id, session_id""".stripMargin) { (s, dir) =>
+    sessionWindowStream.oracle.get) { (s, dir) =>
     // Timers only fire DURING a batch, judged against the watermark the
     // PREVIOUS batch set — a batch's own rows advance the watermark only
     // for the next batch. So the close-out protocol is two sentinel

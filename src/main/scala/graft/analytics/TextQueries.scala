@@ -829,32 +829,45 @@ object TextQueries {
     */
   val bpeTokenize: QueryDef = QueryDef(
     "tx_bpe_tokenize",
+    bpeTokenizeSql(docFilter = "")) { (s, dir) =>
+    tokenCounts(
+      Tables.documents(s, dir)
+        .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
+        .filter(col("word") =!= ""),
+      bpeRepsCached(s, dir))
+  }
+
+  /** The tokenize oracle over the documents `docFilter` keeps: the full
+    * training rounds, then the per-doc token counts of those documents.
+    */
+  private def bpeTokenizeSql(docFilter: String): String =
     s"""WITH words AS (SELECT unnest(string_split(text, ' ')) AS word FROM documents),
        |vocab AS (SELECT word, COUNT(*) AS freq FROM words WHERE word <> '' GROUP BY word),
        |v1 AS MATERIALIZED (SELECT word, freq,
        |  chr(31)||chr(31) || array_to_string(string_split(word, ''), chr(31)||chr(31)) || chr(31)||chr(31) AS rep
        |  FROM vocab),
        |${(1 to BpeRounds).map(bpeOracleRound).mkString(",\n")},
-       |wd AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents),
+       |wd AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents$docFilter),
        |tok AS (
        |  SELECT doc_id, len(list_filter(string_split(rep, chr(31)||chr(31)), x -> x <> '')) AS n_sym
        |  FROM wd JOIN v${BpeRounds + 1} USING (word) WHERE word <> '')
        |SELECT doc_id, COUNT(*) AS n_words, CAST(SUM(n_sym) AS BIGINT) AS n_tokens,
        |  CAST(CAST(SUM(n_sym) AS DOUBLE) / COUNT(*) AS DOUBLE) AS tokens_per_word
-       |FROM tok GROUP BY doc_id""".stripMargin) { (s, dir) =>
-    val reps = bpeRepsCached(s, dir)
-      .select(col("word"),
-        size(filter(split(col("rep"), BpeSS), x => length(x) > 0)).as("n_sym"))
-    Tables.documents(s, dir)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
-      .filter(col("word") =!= "")
-      .join(reps, "word")
+       |FROM tok GROUP BY doc_id""".stripMargin
+
+  /** Both tokenize twins' count: each word's symbol count in its final
+    * rep (`reps`: word, rep), joined to the (doc_id, word) occurrences
+    * and rolled up per doc.
+    */
+  private def tokenCounts(words: org.apache.spark.sql.DataFrame,
+      reps: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    words.join(reps.select(col("word"),
+        size(filter(split(col("rep"), BpeSS), x => length(x) > 0)).as("n_sym")), "word")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_words"),
         sum("n_sym").cast("long").as("n_tokens"),
         (sum("n_sym").cast(DoubleType) / count(lit(1))).cast(DoubleType)
           .as("tokens_per_word"))
-  }
 
   // --- lake-persisted tokenizer + incremental batch tokenization -----------
 
@@ -896,35 +909,14 @@ object TextQueries {
     */
   val bpeIncrLake: QueryDef = QueryDef(
     "tx_bpe_incr_lake",
-    s"""WITH words AS (SELECT unnest(string_split(text, ' ')) AS word FROM documents),
-       |vocab AS (SELECT word, COUNT(*) AS freq FROM words WHERE word <> '' GROUP BY word),
-       |v1 AS MATERIALIZED (SELECT word, freq,
-       |  chr(31)||chr(31) || array_to_string(string_split(word, ''), chr(31)||chr(31)) || chr(31)||chr(31) AS rep
-       |  FROM vocab),
-       |${(1 to BpeRounds).map(bpeOracleRound).mkString(",\n")},
-       |wd AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents
-       |       WHERE doc_id % 5 = 0),
-       |tok AS (
-       |  SELECT doc_id, len(list_filter(string_split(rep, chr(31)||chr(31)), x -> x <> '')) AS n_sym
-       |  FROM wd JOIN v${BpeRounds + 1} USING (word) WHERE word <> '')
-       |SELECT doc_id, COUNT(*) AS n_words, CAST(SUM(n_sym) AS BIGINT) AS n_tokens,
-       |  CAST(CAST(SUM(n_sym) AS DOUBLE) / COUNT(*) AS DOUBLE) AS tokens_per_word
-       |FROM tok GROUP BY doc_id""".stripMargin) { (s, dir) =>
+    bpeTokenizeSql(docFilter = "\n       WHERE doc_id % 5 = 0")) { (s, dir) =>
     val (_, repsSink) = ensureBpeLake(s, dir)
     val batchWords = Tables.documents(s, dir)
       .filter(col("doc_id") % 5 === 0)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
       .filter(col("word") =!= "")
-    val reps = graft.ingest.MergeSink
-      .readOverlapping(s, repsSink, batchWords.select("word"), Seq("word"))
-      .select(col("word"),
-        size(filter(split(col("rep"), BpeSS), x => length(x) > 0)).as("n_sym"))
-    batchWords.join(reps, "word")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_words"),
-        sum("n_sym").cast("long").as("n_tokens"),
-        (sum("n_sym").cast(DoubleType) / count(lit(1))).cast(DoubleType)
-          .as("tokens_per_word"))
+    tokenCounts(batchWords, graft.ingest.MergeSink
+      .readOverlapping(s, repsSink, batchWords.select("word"), Seq("word")))
   }
 
   /** Synthetic crawl page around a document (the codec-fixture pattern

@@ -88,8 +88,8 @@ object SourceConnector {
   *    look like a new record);
   *  - multiple suffixes are unioned (Reddit's dual query,
   *    scrapers/reddit_scraper.py:66).
-  * A custom `applyLimit` overrides the cap semantics (page-ranged HTML
-  * sources cap on page_num — tasks.py:63,128,145).
+  * Page-ranged HTML sources cap on page_num instead
+  * (`Dsv2FixtureConnector.pageCapCol` — tasks.py:63,128,145).
   */
 final class FixtureConnector(
     val platform: String,
@@ -97,7 +97,6 @@ final class FixtureConnector(
     schema: StructType,
     eventTime: Option[Column] = None,
     suffixes: Seq[String] = Seq(""),
-    applyLimit: Option[(DataFrame, Int) => DataFrame] = None,
     tiebreak: Seq[Column] = Nil)
   extends SourceConnector {
 
@@ -120,27 +119,23 @@ final class FixtureConnector(
     }
     params.limit match {
       case Some(n) =>
-        applyLimit match {
-          case Some(f) => f(windowed, n)
+        eventTime match {
+          case Some(et) =>
+            windowed.orderBy(et.desc_nulls_last +: tiebreak: _*).limit(n)
           case None =>
-            eventTime match {
-              case Some(et) =>
-                windowed.orderBy(et.desc_nulls_last +: tiebreak: _*).limit(n)
-              case None =>
-                // no event time → no "newest": cap by an arbitrary-but-
-                // stable total order (the hash of the full row), the SAME
-                // order the batched path uses, so fetch and fetchAll pick
-                // identical survivors. Mirrors the reference's untimed
-                // caps ("whatever N items the API returned"); a backlog
-                // beyond the cap needs an event-time column to drain.
-                // (Explicit column list: a bare star is invalid inside
-                // Sort — latent until the async seam routed per-company
-                // fetches through this branch.)
-                windowed
-                  .orderBy(xxhash64(to_json(struct(
-                    windowed.columns.toSeq.map(col): _*))))
-                  .limit(n)
-            }
+            // no event time → no "newest": cap by an arbitrary-but-
+            // stable total order (the hash of the full row), the SAME
+            // order the batched path uses, so fetch and fetchAll pick
+            // identical survivors. Mirrors the reference's untimed
+            // caps ("whatever N items the API returned"); a backlog
+            // beyond the cap needs an event-time column to drain.
+            // (Explicit column list: a bare star is invalid inside
+            // Sort — latent until the async seam routed per-company
+            // fetches through this branch.)
+            windowed
+              .orderBy(xxhash64(to_json(struct(
+                windowed.columns.toSeq.map(col): _*))))
+              .limit(n)
         }
       case None => windowed
     }
@@ -174,7 +169,7 @@ final class FixtureConnector(
       .withColumn("__skey", BatchedFetch.skeyFromBase(
         regexp_extract(input_file_name(), "([^/]+)\\.json$", 1), suffixes))
     BatchedFetch(spark, raw, withHandle.map { case (c, h, s) => (c, sanitize(h), s) },
-      eventTime, until, limit, applyLimit, tiebreak)
+      eventTime, until, limit, None, tiebreak)
   }
 }
 

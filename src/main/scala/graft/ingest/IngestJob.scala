@@ -172,9 +172,8 @@ object Pipelines {
     def fx(platform: String, schema: org.apache.spark.sql.types.StructType,
            eventTime: Option[Column] = None,
            suffixes: Seq[String] = Seq(""),
-           applyLimit: Option[(DataFrame, Int) => DataFrame] = None,
            tiebreak: Seq[Column] = Nil) =
-      new FixtureConnector(platform, fixturesDir, schema, eventTime, suffixes, applyLimit, tiebreak)
+      new FixtureConnector(platform, fixturesDir, schema, eventTime, suffixes, tiebreak)
 
     Seq(
       IngestSpec("twitter", "twitter_mentions", "twitter_username",

@@ -9,18 +9,7 @@ import java.nio.file.{Files, Paths}
 object DumpOracle {
   def main(args: Array[String]): Unit = {
     val Array(out) = args
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = graft.SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(out), json)
+    Files.writeString(Paths.get(out), graft.Verify.oracleJson())
     ()
   }
 }

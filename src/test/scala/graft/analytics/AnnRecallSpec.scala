@@ -259,16 +259,25 @@ class AnnRecallSpec extends AnyFunSuite {
     // grows the cell count); the beam walk scores at most its entry points
     // (GraphEntries per probed cell since r14's multi-entry seeds) plus
     // rounds·ef·M expansions PER PROBE — a corpus-size-independent
-    // constant. Checked on both corpus shapes, plus the out-degree cap the
-    // bound depends on.
+    // constant. Checked on both corpus shapes, for every back end of the
+    // one walk (in-plan, lake, incremental lake — each bounded by its own
+    // cell count), plus the out-degree cap the bound depends on.
     for (d <- Seq(sf, mogDir)) {
-      val (sc, _) = AnnQueries.graphBeamParts(spark, d)
-      val k = AnnQueries.ivfCellsFor(graft.Tables.embeddings(spark, d).count())
-      val bound = AnnQueries.GraphEntries * AnnQueries.nprobeFor(k) +
-        AnnQueries.BeamRounds * AnnQueries.BeamEf * AnnQueries.GraphM
-      val perProbe = sc.groupBy("probe_id").count().collect().map(_.getLong(1))
-      assert(perProbe.nonEmpty && perProbe.forall(_ <= bound),
-        s"scored-candidate law violated in $d: ${perProbe.max} > $bound")
+      val inPlanCells =
+        AnnQueries.ivfCellsFor(graft.Tables.embeddings(spark, d).count())
+      val lake = AnnGraphLake.ensureGraphLake(spark, d)
+      val incr = AnnGraphLake.ensureGraphIncrLake(spark, d)
+      val walks = Seq(
+        ("ann_graph_beam", inPlanCells, () => AnnQueries.graphBeamParts(spark, d)._1),
+        ("ann_graph_lake", lake.cells, () => AnnGraphLake.beamParts(spark, d, lake)._1),
+        ("ann_graph_incr", incr.cells, () => AnnGraphLake.beamParts(spark, d, incr)._1))
+      for ((q, cells, scored) <- walks) {
+        val bound = AnnQueries.GraphEntries * AnnQueries.nprobeFor(cells) +
+          AnnQueries.BeamRounds * AnnQueries.BeamEf * AnnQueries.GraphM
+        val perProbe = scored().groupBy("probe_id").count().collect().map(_.getLong(1))
+        assert(perProbe.nonEmpty && perProbe.forall(_ <= bound),
+          s"$q scored-candidate law violated in $d: ${perProbe.max} > $bound")
+      }
       val deg = AnnQueries.graphEdges(spark, d)
         .groupBy("src").count().collect().map(_.getLong(1))
       assert(deg.forall(_ <= AnnQueries.GraphM),
