@@ -70,7 +70,7 @@ object Verify {
     * otherwise make the driver's json.load fail and silently zero the
     * round's correctness.
     */
-  private def jsonString(s: String): String = "\"" + s.flatMap {
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"

@@ -7,7 +7,8 @@ import org.apache.spark.storage.StorageLevel
 /** The ONE process-local memo behind every shared intermediate: cached
   * subplans (shingle tables, semdedup assignments, deviation tables, PQ
   * subvectors, BFS edge tables, …), the lake sinks and staged deliveries
-  * the `ensure*` builders construct, and the ANN index handles.
+  * the `ensure*` builders construct, the ANN index handles, and the ingest
+  * control-table snapshot (`Watermarks.snapshot`).
   *
   * Key: (dir, tag). `dir` is the corpus directory the value is derived
   * from; `tag` names the value. A FRAME entry is additionally bound to the

@@ -3,9 +3,11 @@ package graft.ingest
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import java.sql.Timestamp
+import scala.util.control.NonFatal
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
+import graft.Verify.jsonString
 
 /** Minimal HTTP surface over the ingest engine — the working version of the
   * reference's broken Flask endpoint (app.py:10-14 exposes `/health` and
@@ -49,20 +51,6 @@ final class HttpApi(
       .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
       .toMap
 
-  private def jsonStr(s: String): String = {
-    val sb = new StringBuilder("\"")
-    s.foreach {
-      case '\\' => sb.append("\\\\")
-      case '"' => sb.append("\\\"")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < 0x20 => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.append("\"").toString
-  }
-
   /** JDK HttpServer prefix-matches contexts and dispatches every method;
     * guard both (exact path, GET|POST like the reference's Flask default)
     * before running a side-effectful ingest.
@@ -96,17 +84,17 @@ final class HttpApi(
       val results = IngestJob.runAllResilient(spark, usersPath, warehouse, fixturesDir, mode, now)
       val body = results.toSeq.sortBy(_._1).map {
         case (platform, Right(r)) =>
-          s"${jsonStr(platform)}:{" +
+          s"${jsonString(platform)}:{" +
             s""""inserted":${r.inserted},"per_company":{""" +
             r.perCompany.toSeq.sortBy(_._1)
-              .map { case (c, n) => s"${jsonStr(c)}:$n" }.mkString(",") + "}}"
+              .map { case (c, n) => s"${jsonString(c)}:$n" }.mkString(",") + "}}"
         case (platform, Left(err)) =>
-          s"${jsonStr(platform)}:{" + s""""error":${jsonStr(err)}}"""
+          s"${jsonString(platform)}:{" + s""""error":${jsonString(err)}}"""
       }.mkString("{", ",", "}")
       respond(ex, 200, body)
     } catch {
-      case e: IllegalArgumentException => respond(ex, 400, s"""{"error":${jsonStr(e.getMessage)}}""")
-      case e: Throwable => respond(ex, 500, s"""{"error":${jsonStr(String.valueOf(e.getMessage))}}""")
+      case e: IllegalArgumentException => respond(ex, 400, s"""{"error":${jsonString(e.getMessage)}}""")
+      case NonFatal(e) => respond(ex, 500, s"""{"error":${jsonString(String.valueOf(e.getMessage))}}""")
     }
     }(ex))
 

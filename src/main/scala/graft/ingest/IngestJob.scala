@@ -2,7 +2,7 @@ package graft.ingest
 
 import java.sql.Timestamp
 import scala.util.control.NonFatal
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.schema.Schemas
 
@@ -41,9 +41,10 @@ final case class IngestResult(
 object IngestJob {
 
   /** One incremental micro-batch for one platform:
-    * control scan (S1/S2 + F10 guards) → per-company source fetch with
-    * (since, until, limit) pushdown → normalize (P1-P13, F3-F9, X1-X2) →
-    * dedup-append sink (K1-K8) → watermark advance iff inserted>0 (K9).
+    * eligibility on the control-table snapshot (S1/S2 + F10 guards) →
+    * per-company source fetch with (since, until, limit) pushdown →
+    * normalize (P1-P13, F3-F9, X1-X2) → dedup-append sink (K1-K8) →
+    * watermark advance iff inserted>0 (K9), committed by this op.
     *
     * The company fan-out is ONE batched fetch (`fetchAll`): the control
     * table drives which companies participate (O(companies) driver rows,
@@ -59,33 +60,52 @@ object IngestJob {
       spec: IngestSpec,
       mode: Mode,
       now: Timestamp): IngestResult = {
-    val wmCol = s"last_fetched_${spec.platform}"
-    val users = Watermarks.read(spark, usersPath)
-    val eligible = mode match {
+    val step = ingest(spark, Watermarks.snapshot(spark, usersPath), warehouse, spec, mode, now)
+    Watermarks.commit(spark, usersPath, Seq(step.advance)) // K9
+    step.result
+  }
+
+  /** One platform's batch with its K9 advance not yet committed. */
+  private final case class Step(result: IngestResult, advance: Watermarks.Advance)
+
+  /** `run` up to the watermark commit: eligibility (S1/S2 + F10 guards) is
+    * evaluated on the control-table snapshot's rows on the driver, then
+    * fetch → normalize → sink. Returns the advance the batch earned.
+    */
+  private def ingest(
+      spark: SparkSession,
+      users: Watermarks.Snapshot,
+      warehouse: String,
+      spec: IngestSpec,
+      mode: Mode,
+      now: Timestamp): Step = {
+    val schema = users.schema
+    val (id, name, handle, wm) = (schema.fieldIndex("id"), schema.fieldIndex("company_name"),
+      schema.fieldIndex(spec.handleCol), schema.fieldIndex(s"last_fetched_${spec.platform}"))
+    val eligible: Row => Boolean = mode match {
       case General(staleMin) => // S2/F2: watermark stale
         val cutoff = new Timestamp(now.getTime - staleMin * 60000L)
-        users.filter(col(spec.handleCol).isNotNull && // F10
-          col(wmCol).isNotNull && col(wmCol) < lit(cutoff))
+        r => !r.isNullAt(handle) && // F10
+          !r.isNullAt(wm) && r.getTimestamp(wm).before(cutoff)
       case Catchup() => // S1/F1: never fetched
-        users.filter(col(spec.handleCol).isNotNull && col(wmCol).isNull)
+        r => !r.isNullAt(handle) && r.isNullAt(wm)
     }
-    val rows = eligible
-      .select(col("id"), col("company_name"), col(spec.handleCol), col(wmCol))
-      .collect()
+    val rows = users.rows.filter(eligible)
 
-    if (rows.isEmpty) return IngestResult(spec.platform, Map.empty, 0L)
+    if (rows.isEmpty)
+      return Step(IngestResult(spec.platform, Map.empty, 0L), Watermarks.Advance(spec.platform, Set.empty, now))
     // company_name is the grouping identity end-to-end (sink enrichment,
     // per-company counts, watermark attribution — the reference's model);
     // a duplicate name would conflate two companies' counts and advance
     // the wrong watermark, silently skipping records forever. Fail loud.
-    require(rows.map(_.getString(1)).distinct.length == rows.length,
+    require(rows.map(_.getString(name)).distinct.length == rows.length,
       s"${spec.platform}: duplicate company_name in control table — " +
         "watermark attribution requires unique names")
 
-    val companies = rows.toSeq.map { r =>
-      val company = Company(r.getInt(0), r.getString(1), Option(r.getString(2)))
+    val companies = rows.map { r =>
+      val company = Company(r.getInt(id), r.getString(name), Option(r.getString(handle)))
       val since = mode match {
-        case General(_) => Option(r.getTimestamp(3))
+        case General(_) => Option(r.getTimestamp(wm))
         case Catchup()  => Some(new Timestamp(now.getTime - spec.lookbackDays * 86400000L))
       }
       (company, since)
@@ -103,16 +123,18 @@ object IngestJob {
       groupCol = Some("company_name"),
       partitionBy = Seq("company_name"))
 
-    val advancedIds = rows.collect {
-      case r if res.perGroup.getOrElse(r.getString(1), 0L) > 0L => r.getInt(0)
+    val advancedIds = companies.collect {
+      case (c, _) if res.perGroup.getOrElse(c.name, 0L) > 0L => c.id
     }.toSet
-    Watermarks.advanceFrom(spark, usersPath, users, spec.platform, advancedIds, now) // K9
-    IngestResult(spec.platform, res.perGroup, res.inserted)
+    Step(IngestResult(spec.platform, res.perGroup, res.inserted),
+      Watermarks.Advance(spec.platform, advancedIds, now))
   }
 
   /** Every platform sequentially — the capability behind the reference's
     * broken `/fetch-now` HTTP entry (SURVEY.md §3.3, app.py:10-14), minus
-    * the bug: returns per-platform inserted counts.
+    * the bug: returns per-platform inserted counts. One tick: every
+    * platform is ingested against one control-table snapshot, and their
+    * advances are committed in one rewrite once all have succeeded.
     */
   def runAll(
       spark: SparkSession,
@@ -120,8 +142,14 @@ object IngestJob {
       warehouse: String,
       fixturesDir: String,
       mode: Mode,
-      now: Timestamp): Map[String, IngestResult] =
-    Pipelines.specs(fixturesDir).map(s => s.platform -> run(spark, usersPath, warehouse, s, mode, now)).toMap
+      now: Timestamp): Map[String, IngestResult] = {
+    val users = Watermarks.snapshot(spark, usersPath)
+    val steps = Pipelines.specs(fixturesDir).map(s => s.platform -> ingest(spark, users, warehouse, s, mode, now))
+    Watermarks.commit(spark, usersPath, steps.map(_._2.advance)) // K9
+    steps.map { case (p, st) => p -> st.result }.toMap
+  }
+
+  private val MaxRetries = 3
 
   /** Retry budget per platform task, mirroring the reference's Celery
     * `max_retries=3` (tasks.py:109,133,150,203). A platform that still
@@ -139,17 +167,24 @@ object IngestJob {
       spec: IngestSpec,
       mode: Mode,
       now: Timestamp,
-      maxRetries: Int = 3): Either[String, IngestResult] = {
+      maxRetries: Int = MaxRetries): Either[String, IngestResult] =
+    retrying(spec.platform, maxRetries)(run(spark, usersPath, warehouse, spec, mode, now))
+
+  private def retrying[A](platform: String, maxRetries: Int)(attempt: => A): Either[String, A] = {
     var last: Throwable = null
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      try return Right(run(spark, usersPath, warehouse, spec, mode, now))
-      catch { case NonFatal(e) => last = e; attempt += 1 }
+    var n = 0
+    while (n <= maxRetries) {
+      try return Right(attempt)
+      catch { case NonFatal(e) => last = e; n += 1 }
     }
-    Left(s"${spec.platform}: failed after ${maxRetries + 1} attempts: ${last.getMessage}")
+    Left(s"$platform: failed after ${maxRetries + 1} attempts: ${last.getMessage}")
   }
 
-  /** runAll with per-platform fault isolation + retries. */
+  /** runAll with per-platform fault isolation + retries: a platform that
+    * fails every attempt is a Left and its watermark column stays where
+    * the tick found it, while the others' advances commit in the tick's
+    * one rewrite.
+    */
   def runAllResilient(
       spark: SparkSession,
       usersPath: String,
@@ -157,9 +192,23 @@ object IngestJob {
       fixturesDir: String,
       mode: Mode,
       now: Timestamp): Map[String, Either[String, IngestResult]] =
-    Pipelines.specs(fixturesDir)
-      .map(s => s.platform -> runWithRetry(spark, usersPath, warehouse, s, mode, now))
-      .toMap
+    runAllResilient(spark, usersPath, warehouse, Pipelines.specs(fixturesDir), mode, now)
+
+  /** [[runAllResilient]] over the given pipelines. */
+  def runAllResilient(
+      spark: SparkSession,
+      usersPath: String,
+      warehouse: String,
+      specs: Seq[IngestSpec],
+      mode: Mode,
+      now: Timestamp): Map[String, Either[String, IngestResult]] = {
+    val users = Watermarks.snapshot(spark, usersPath)
+    val steps = specs.map { s =>
+      s.platform -> retrying(s.platform, MaxRetries)(ingest(spark, users, warehouse, s, mode, now))
+    }
+    Watermarks.commit(spark, usersPath, steps.flatMap(_._2.toOption).map(_.advance)) // K9
+    steps.map { case (p, st) => p -> st.map(_.result) }.toMap
+  }
 }
 
 /** The ten platform pipelines as data (SURVEY.md §2.1 S3-S11) — after the

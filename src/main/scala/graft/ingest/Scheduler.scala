@@ -25,16 +25,25 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, Executors,
   *    the concurrency story lives in the engine (racing sink writers are
   *    proven safe in ConcurrentMergeSpec), not in the trigger.
   *
-  * The clock is injectable so specs drive deterministic time; `tick` is
-  * public for the same reason — the threaded path and the logical path
-  * share one implementation.
+  * The clock and the pipelines are injectable so specs drive deterministic
+  * time and planted failures; `tick` is public for the same reason — the
+  * threaded path and the logical path share one implementation.
   */
 final class Scheduler(
     spark: org.apache.spark.sql.SparkSession,
     usersPath: String,
     warehouse: String,
-    fixturesDir: String,
-    clock: () => Timestamp = () => new Timestamp(System.currentTimeMillis())) {
+    pipelines: Seq[IngestSpec],
+    clock: () => Timestamp) {
+
+  /** The scheduler over the ten fixture-backed platform pipelines. */
+  def this(
+      spark: org.apache.spark.sql.SparkSession,
+      usersPath: String,
+      warehouse: String,
+      fixturesDir: String,
+      clock: () => Timestamp = () => new Timestamp(System.currentTimeMillis())) =
+    this(spark, usersPath, warehouse, Pipelines.specs(fixturesDir), clock)
 
   final case class TickReport(
       mode: String,
@@ -51,15 +60,17 @@ final class Scheduler(
   private val firstTick = new CountDownLatch(1)
 
   /** One scheduled firing: run every platform in `mode` at the injected
-    * clock's now. Failures are isolated per platform (runAllResilient) and
-    * recorded, never thrown — a scheduler that dies on one bad platform
-    * stops ALL ingestion, the reference's worker-crash failure mode.
+    * clock's now, committing the successful platforms' watermark advances
+    * in one control-table rewrite. Failures are isolated per platform
+    * (runAllResilient) and recorded, never thrown — a scheduler that dies
+    * on one bad platform stops ALL ingestion, the reference's worker-crash
+    * failure mode.
     */
   def tick(mode: Mode): TickReport = {
     val at = clock()
     val label = mode match { case General(_) => "general"; case Catchup() => "catchup" }
     val r = TickReport(label, at,
-      IngestJob.runAllResilient(spark, usersPath, warehouse, fixturesDir, mode, at))
+      IngestJob.runAllResilient(spark, usersPath, warehouse, pipelines, mode, at))
     reports.add(r)
     firstTick.countDown()
     r

@@ -8,6 +8,19 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.schema.Schemas
 
+/** A connector that throws `error` on the first `failures` fetches. */
+private[ingest] class Flaky(inner: SourceConnector, failures: Int,
+    error: Int => Throwable = n => new RuntimeException(s"transient source failure #$n"))
+  extends SourceConnector {
+  val calls = new AtomicInteger(0)
+  def platform: String = inner.platform
+  def fetch(spark: SparkSession, c: Company, p: FetchParams): DataFrame = {
+    val n = calls.incrementAndGet()
+    if (n <= failures) throw error(n)
+    inner.fetch(spark, c, p)
+  }
+}
+
 /** Fault tolerance of the ingest runner: transient source failures retry
   * (the reference's Celery max_retries=3, tasks.py:109) and terminal
   * failures are isolated without corrupting sink or watermark state.
@@ -15,19 +28,6 @@ import graft.schema.Schemas
 class RetrySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val now = Timestamp.valueOf("2025-06-01 00:00:00")
-
-  /** A connector that throws `error` on the first `failures` fetches. */
-  private class Flaky(inner: SourceConnector, failures: Int,
-      error: Int => Throwable = n => new RuntimeException(s"transient source failure #$n"))
-    extends SourceConnector {
-    val calls = new AtomicInteger(0)
-    def platform: String = inner.platform
-    def fetch(spark: SparkSession, c: Company, p: FetchParams): DataFrame = {
-      val n = calls.incrementAndGet()
-      if (n <= failures) throw error(n)
-      inner.fetch(spark, c, p)
-    }
-  }
 
   private def fixturesDir: String =
     new java.io.File(getClass.getResource("/fixtures").toURI).getAbsolutePath

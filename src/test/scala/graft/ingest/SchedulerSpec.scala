@@ -2,6 +2,7 @@ package graft.ingest
 
 import java.nio.file.Files
 import java.sql.Timestamp
+import org.apache.spark.graft.ListenerBus
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
@@ -48,6 +49,26 @@ class SchedulerSpec extends AnyFunSuite {
       s"fresh-watermark general tick must insert nothing, got ${general.inserted}")
 
     assert(sched.history.map(_.mode) == Seq("catchup", "catchup", "general"))
+  }
+
+  test("a tick commits its platforms' advances in one rewrite; a failing platform's column stays") {
+    val root = Files.createTempDirectory("graft-sched-commit").toString
+    val users = s"$root/users"; writeUsers(users)
+    val pipelines = Pipelines.specs(fixturesDir).map { s =>
+      if (s.platform == "facebook") s.copy(connector = new Flaky(s.connector, failures = 99)) else s
+    }
+    val sched = new Scheduler(spark, users, s"$root/wh", pipelines, () => t0)
+    Watermarks.snapshot(spark, users) // the tick below finds the snapshot fresh
+    val (tick, controlJobs) = ListenerBus.jobsDuring(spark.sparkContext, Some("Watermarks.scala")) {
+      sched.tick(Catchup())
+    }
+    assert(tick.failures.size == 1 && tick.failures.head.startsWith("facebook:"), tick.failures)
+    assert(controlJobs == 1, s"$controlJobs control-table jobs in one tick")
+    val row = Watermarks.read(spark, users).collect().head
+    val moved = Schemas.platforms.filter(p => row.getAs[Timestamp](s"last_fetched_$p") != null)
+    val inserted = tick.results.collect { case (p, Right(r)) if r.inserted > 0 => p }.toSet
+    assert(moved.toSet == inserted && !inserted("facebook") && inserted.size > 1, moved)
+    moved.foreach(p => assert(row.getAs[Timestamp](s"last_fetched_$p") == t0, p))
   }
 
   test("started cadence fires ticks on the shared path and stops cleanly") {
